@@ -12,6 +12,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 # Default service-graph latency bounds: 16 buckets 2ms..15s
 # (stsservicegraphconnector/connector.go:41-44), seconds.
 DEFAULT_LATENCY_BOUNDS = [
@@ -453,8 +455,4 @@ def telemetry_counters(
         (run_id, "mapping_errors_total", "", int(mapping_errors)),
         (run_id, "mappings_removed_total", "", int(mappings_removed)),
     ]
-    # config-scale driver frame: one partition, not defaultParallelism
-    # (repartition, not coalesce — coalesce(1) stalls on local relations)
-    return spark.createDataFrame(
-        rows, "run_id string, metric string, label string, value long"
-    ).repartition(1)
+    return local_frame(spark, rows, "run_id string, metric string, label string, value long")

@@ -34,6 +34,7 @@ pruned columnar input once per mapping, but that scan is the cheap part.
 from __future__ import annotations
 
 import re
+import weakref
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
@@ -306,6 +307,13 @@ def _tags_col(tags: tuple[TagMapping, ...]):
     return F.map_filter(out, lambda k, v: v.isNotNull())
 
 
+# session -> {(input schema json, vars, exprs and kinds): _validate result}.
+# The analog of the reference's CEL compile cache (expression.go:313-339):
+# each distinct mapping is analyzed once per session and input schema, not
+# once per run. Weak keys: a stopped session's entries go with it.
+_VALIDATED: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
 def _validate(df: DataFrame, m, exprs_and_kinds: list[tuple[str, str]]) -> str | None:
     """Plan-time expression validation (expression.go:367-439 analog).
 
@@ -313,7 +321,18 @@ def _validate(df: DataFrame, m, exprs_and_kinds: list[tuple[str, str]]) -> str |
     kind 'string': str/int/double/bool ok (stringified), map is an error.
     kind 'map': must resolve to a map.
     kind 'bool': anything coercible; left to where().
+
+    The result depends only on the session (its SQL functions), the
+    input schema and the expressions, so it is memoized on them.
     """
+    memo = _VALIDATED.setdefault(df.sparkSession, {})
+    key = (df.schema.json(), tuple(m.vars), tuple(exprs_and_kinds))
+    if key not in memo:
+        memo[key] = _analyze(df, m, exprs_and_kinds)
+    return memo[key]
+
+
+def _analyze(df: DataFrame, m, exprs_and_kinds: list[tuple[str, str]]) -> str | None:
     # var expressions are analyzed eagerly by withColumn: an invalid var
     # (e.g. unresolvable column in a user-supplied snapshot) must surface
     # as a mapping-level error, not abort the whole run

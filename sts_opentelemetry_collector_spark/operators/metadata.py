@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import MappingSet
+from ..session import local_frame
 
 # the compacted metadata topic (metadata_publisher.go:18)
 METADATA_TOPIC = "sts_topology_stream_metadata"
@@ -47,15 +48,14 @@ def stream_metadata(spark: SparkSession, mappings: MappingSet) -> DataFrame:
                 (m.identifier, m.identifier, kind, mappings.version,
                  _routing_attrs(m.identifier))
             )
-    # config-scale driver frame: one partition, not defaultParallelism
-    # (repartition, not coalesce — coalesce(1) stalls on local relations)
-    return spark.createDataFrame(rows, METADATA_SCHEMA).repartition(1)
+    return local_frame(spark, rows, METADATA_SCHEMA)
 
 
 def metadata_tombstones(spark: SparkSession, removed: list[str]) -> DataFrame:
     """Null-value records for removed mappings
     (metadata_publisher.go:102-129): key only, payload absent."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(d, True, _routing_attrs(d)) for d in removed],
         "data_source string, tombstone boolean, attrs map<string,string>",
-    ).repartition(1)
+    )

@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.hashes import fnv1a32, fnv1a32_col
+from ..session import local_frame
 
 SHARD_COUNT = 4  # message_builder.go:15
 
@@ -70,19 +71,13 @@ def route_fanout(
 
 
 def removal_tombstones(spark: SparkSession, removed_data_sources: list[str]) -> DataFrame:
-    """R5: cross-join removed mappings x all shards -> tombstone rows
-    (empty payload == delete marker, the Kafka tombstone analog)."""
-    if not removed_data_sources:
-        return spark.createDataFrame(
-            [], "data_source string, shard_id int, tombstone boolean"
-        )
-    ds = spark.createDataFrame(
-        [(d,) for d in removed_data_sources], "data_source string"
-    ).repartition(1)
-    shards = spark.range(SHARD_COUNT, numPartitions=1).select(
-        F.col("id").cast("int").alias("shard_id")
+    """R5: removed mappings x all shards -> tombstone rows (empty payload
+    == delete marker, the Kafka tombstone analog)."""
+    return local_frame(
+        spark,
+        [(d, s, True) for d in removed_data_sources for s in range(SHARD_COUNT)],
+        "data_source string, shard_id int, tombstone boolean",
     )
-    return ds.crossJoin(shards).withColumn("tombstone", F.lit(True))
 
 
 def new_streams(

@@ -35,6 +35,7 @@ from ..operators.enrich import enrich_pages
 from ..operators.mapping import apply_mappings, register_sql_functions
 from ..operators.parse import parse_pages, with_attrs
 from ..operators.routing import removal_tombstones, with_shard_id
+from ..session import ensure_semantics_confs, local_frame
 from ..sources.settings import default_mappings, diff_settings
 from ..sources.webtext import dims
 from .lineage import Manifest, new_run_id, partition_stats, with_lineage_partition
@@ -50,7 +51,7 @@ HEALED_SINKS = ("otel_logs", "rollup_host_window")
 
 
 def _heal_unmanifested_runs(
-    spark, sinks: SinkCatalog, manifest: Manifest,
+    sinks: SinkCatalog, manifest: Manifest,
     sink_names: tuple[str, ...] = HEALED_SINKS,
 ) -> list[str]:
     """Write-audit-publish heal: a run that PUBLISHED commits but crashed
@@ -61,7 +62,7 @@ def _heal_unmanifested_runs(
     so a merge rollback always inverts the table tip. Replaces the
     pre-r5 `shutil.rmtree` orphan purge with an atomic, snapshot-
     isolated operation."""
-    committed = manifest.run_ids(spark)
+    committed = manifest.run_ids()
     healed = []
     for sink_name in sink_names:
         tbl = sinks.table(sink_name)
@@ -300,8 +301,6 @@ def run_pipeline(
         stage_sec[stage] = round(now - _last[0], 2)
         _last[0] = now
 
-    from ..session import ensure_semantics_confs
-
     ensure_semantics_confs(spark)  # eval-error=>false; explicit-tag-wins
     register_sql_functions(spark)
     mappings = mappings or default_mappings()
@@ -311,7 +310,7 @@ def run_pipeline(
 
     # ---- resume: which lineage partitions of THIS input batch are pending?
     # (manifest is input_split-scoped: a new ingest batch processes fully)
-    done = manifest.completed_partitions(spark, input_split=webtext_path)
+    done = manifest.completed_partitions(input_split=webtext_path)
     pending = [p for p in range(n_lineage_buckets) if p not in done]
     if max_partitions_this_run is not None:
         pending = pending[:max_partitions_this_run]
@@ -344,7 +343,7 @@ def run_pipeline(
     # half-visible tables. A run that published but crashed before the
     # manifest recorded it is rolled back here, metadata-only, before
     # this run begins (heals the pre-r5 orphan-purge window atomically).
-    _heal_unmanifested_runs(spark, sinks, manifest)
+    _heal_unmanifested_runs(sinks, manifest)
 
     logs_obs = Observation("otel_logs")
     # snappy on the hot stream sink — same throughput-over-ratio tradeoff
@@ -362,178 +361,17 @@ def run_pipeline(
 
     logs_back = logs_pending.read(spark)
 
-    # ---- mapping engine (over the read-back: no second UDF pass).
-    # Narrow projection of exactly the attr columns the mappings reference:
-    # a pruned columnar re-scan per element sink beats persisting wide rows
-    # (measured 2x faster locally, and the only option at 100 TB; also
-    # re-measured this round against an exchange-sharing repartition under
-    # the branch union — the narrow-column shuffle costs more than the
-    # pruned scans it saves, 6.5s vs 5.1s at 6M pages).
-    mapping_input = with_attrs(
-        logs_back.select("host", "path", "service", "cluster", "namespace", "lang")
-    )
-    from ..operators.parse import ATTRS_SOURCE_COLS
-
-    compiled = apply_mappings(
-        mapping_input, mappings, signal="logs", attr_cols=ATTRS_SOURCE_COLS
-    )
-    _mark("compile_mappings")
-
-    # ---- dedup + shard + route. Record-error counting rides the element
-    # writes via observe() on the pre-required-filter (flagged) frames —
-    # counting errors in a separate job would re-execute the whole branch
-    # union over the input (measured 5s of a 31s run at 4.8M x local[8]).
-    def _flagged_src(flagged, fallback, ids, obs_name):
-        if flagged is None or not ids:
-            return fallback, None
-        obs = Observation(obs_name)
-        metrics = [
-            F.sum(
-                F.when(
-                    ~F.col("_required_ok") & (F.col("data_source") == ds), 1
-                ).otherwise(0)
-            ).alias(f"e{i}")
-            for i, ds in enumerate(ids)
-        ]
-        observed = flagged.observe(obs, *metrics)
-        return (
-            observed.where(F.col("_required_ok")).drop("_required_ok"),
-            (obs, ids),
-        )
-
-    comp_src, comp_err_obs = _flagged_src(
-        compiled.components_flagged, compiled.components,
-        compiled.create_ids.get("components", []), f"comperr_{run_id}",
-    )
-    rel_src, rel_err_obs = _flagged_src(
-        compiled.relations_flagged, compiled.relations,
-        compiled.create_ids.get("relations", []), f"relerr_{run_id}",
-    )
-    elements_keyed = build_element_stream(comp_src, rel_src, compiled.deletes)
-
-    # Keyed write: partitioned by (data_source, shard_id) — the Kafka
-    # partition-ordering contract; files land pre-clustered per stream.
-    part_cols = ["data_source", "shard_id"]
-
-    # Topology-element sinks are APPEND (at-least-once): a crashed run may
-    # re-deliver elements on resume — exactly the reference's Kafka acks
-    # semantics; downstream is a last-writer-wins upsert keyed external_id
-    # (ReplacingMergeTree / topology intake), so re-delivery is a refresh,
-    # not corruption.
-    # Counting rides the write via observe(): ONE action per sink instead
-    # of count+write double execution (matters at both ends of the scale:
-    # small-job floor locally, double scans at 100 TB).
-    el_obs = Observation(f"elements_{run_id}")
-    sinks.append(
-        elements_keyed.observe(
-            el_obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("element_kind") == "component", 1).otherwise(0)).alias("nc"),
-            F.sum(F.when(F.col("element_kind") == "relation", 1).otherwise(0)).alias("nr"),
-            F.sum(F.when(F.col("element_kind") == "delete", 1).otherwise(0)).alias("nd"),
-        ),
-        "topology_elements",
-        partition_by=part_cols,
-    )
-    got = el_obs.get
-    sink_counts["topology_elements"] = got["n"]
-    sink_counts["topology_components"] = int(got["nc"] or 0)
-    sink_counts["topology_relations"] = int(got["nr"] or 0)
-    sink_counts["topology_deletes"] = int(got["nd"] or 0)
-    _mark("elements_write")
-
-    # ---- A6 + R6 + K6 run off ONE unified landed element stream
-    # (publish_element_stream — shared with the streaming flagship).
-    sink_counts.update(
-        publish_element_stream(
-            spark, sinks, run_id,
-            api_keys=api_keys, default_api_key=default_api_key,
-            elements_sink="topology_elements", part_cols=part_cols,
-        )
-    )
-    _mark("publish_envelopes_streams_intake")
-
-    # Metadata publisher analog (metadata_publisher.go:48-129): compacted
-    # snapshot of live mappings, tombstones for removed ones. Snapshot-
-    # change gate (cache.go:129-182): an unchanged snapshot skips the
-    # republish — deep equality, not identity.
-    from ..operators.metadata import metadata_tombstones, stream_metadata
-    from ..sources.settings import snapshot_changed
-
-    from ..operators.routing import with_kafka_key, with_topic
-
-    if snapshot_changed(previous_mappings, mappings) or not sinks.exists(
-        "stream_metadata"
-    ):
-        # attr-driven routing through the shared exporter path: records
-        # resolve their topic + message key from stskafka.* attrs (K1/R4)
-        meta_routed = with_kafka_key(
-            with_topic(stream_metadata(spark, mappings),
-                       default_topic="sts_topology_stream"),
-            default_key_col="data_source",
-        )
-        sinks.overwrite(meta_routed, "stream_metadata", partition_by=["topic"])
-    # record-error counts were observed on the element writes above —
-    # materialize the tiny summary table driver-side, no extra scan
-    err_rows = []
-    for pair in (comp_err_obs, rel_err_obs):
-        if pair is None:
-            continue
-        obs, ids = pair
-        got = obs.get
-        for i, ds in enumerate(ids):
-            n = int(got[f"e{i}"] or 0)
-            if n > 0:
-                err_rows.append(
-                    (ds, "logs", "required output expression evaluated to null", n)
-                )
-    # zero errors (the common case) skips the commit entirely: an empty
-    # append still paid a full txlog write+commit round trip (~0.3s of
-    # data-invariant driver tail per run); the reference likewise emits
-    # error records only when errors exist
-    if err_rows:
-        sinks.append(
-            spark.createDataFrame(
-                err_rows,
-                "data_source string, signal string, error string, error_count long",
-            ).repartition(1),
-            "mapping_errors",
-            partition_by=None,
-        )
-    sink_counts["mapping_errors"] = len(err_rows)
-    _mark("mapping_errors_write")
-
-    # ---- tombstones for removed mappings (R5); count is known driver-side
-    # (4 shards per removed mapping), no extra job when nothing was removed
-    removed = diff_settings(previous_mappings, mappings) if previous_mappings else []
-    if removed:
-        sinks.append(removal_tombstones(spark, removed), "tombstones", partition_by=None)
-        # metadata tombstones ride the same removal event
-        # (metadata_publisher.go PublishTombstones)
-        sinks.append(
-            metadata_tombstones(spark, removed), "metadata_tombstones",
-            partition_by=None,
-        )
-    sink_counts["tombstones"] = 4 * len(removed)
-    sink_counts["metadata_tombstones"] = len(removed)
-    _mark("tombstones_metadata")
-
-    # ---- PUBLISH the staged logs: one atomic commit makes this run's
-    # rows visible; everything before this point was audit. The crash
-    # window between publish and the manifest record at the end of the
-    # run is healed (rolled back) at the next run's start.
-    logs_pending.publish()
-    _mark("logs_publish")
-
     # ---- K4 resources MERGE + windowed rollup MERGE + per-partition
-    # lineage stats: three independent jobs over the landed logs, each
-    # committing to its own table — overlapped from a small driver thread
-    # pool (guide-standard job overlap) so the tail tasks of one back-fill
-    # the executors the others free. The rollup stays INCREMENTAL: each
-    # run aggregates only ITS pages and additively MERGEs the partials
-    # into the sink keyed (host, window) — run cost is O(this run), not
-    # O(table), and the run-heal rolls back an unmanifested run's merge so
-    # crashes never double-count.
+    # lineage stats: three jobs that read only the staged logs, each
+    # committing to its own table. Submitted here, they overlap the whole
+    # mapping -> elements -> publish chain below instead of waiting behind
+    # it, and the tail tasks of one back-fill the executors the others
+    # free. The rollup stays INCREMENTAL: each run aggregates only ITS
+    # pages and additively MERGEs the partials into the sink keyed (host,
+    # window) — run cost is O(this run), not O(table). Both merges may
+    # commit before the logs publish; the run-heal rolls back an
+    # unmanifested run's rollup merge, and the resources MERGE is an
+    # idempotent refresh, so a crash anywhere still converges.
     rollup = windowed_rollup(logs_back, ts_col="warc_ts", keys=["host"],
                              window=rollup_window, salt_skew=True)
 
@@ -555,10 +393,176 @@ def run_pipeline(
     def _j_stats():
         return partition_stats(logs_back).collect()
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_res = pool.submit(_j_resources)
-        f_roll = pool.submit(_j_rollup)
-        f_stats = pool.submit(_j_stats)
+    # Leaving the block waits for all three jobs, also when the chain
+    # raises: no tail commit lands after the caller has seen the failure.
+    with ThreadPoolExecutor(max_workers=3) as tail:
+        f_res = tail.submit(_j_resources)
+        f_roll = tail.submit(_j_rollup)
+        f_stats = tail.submit(_j_stats)
+
+        # ---- mapping engine (over the read-back: no second UDF pass).
+        # Narrow projection of exactly the attr columns the mappings reference:
+        # a pruned columnar re-scan per element sink beats persisting wide rows
+        # (measured 2x faster locally, and the only option at 100 TB; also
+        # re-measured this round against an exchange-sharing repartition under
+        # the branch union — the narrow-column shuffle costs more than the
+        # pruned scans it saves, 6.5s vs 5.1s at 6M pages).
+        mapping_input = with_attrs(
+            logs_back.select("host", "path", "service", "cluster", "namespace", "lang")
+        )
+        from ..operators.parse import ATTRS_SOURCE_COLS
+
+        compiled = apply_mappings(
+            mapping_input, mappings, signal="logs", attr_cols=ATTRS_SOURCE_COLS
+        )
+        _mark("compile_mappings")
+
+        # ---- dedup + shard + route. Record-error counting rides the element
+        # writes via observe() on the pre-required-filter (flagged) frames —
+        # counting errors in a separate job would re-execute the whole branch
+        # union over the input (measured 5s of a 31s run at 4.8M x local[8]).
+        def _flagged_src(flagged, fallback, ids, obs_name):
+            if flagged is None or not ids:
+                return fallback, None
+            obs = Observation(obs_name)
+            metrics = [
+                F.sum(
+                    F.when(
+                        ~F.col("_required_ok") & (F.col("data_source") == ds), 1
+                    ).otherwise(0)
+                ).alias(f"e{i}")
+                for i, ds in enumerate(ids)
+            ]
+            observed = flagged.observe(obs, *metrics)
+            return (
+                observed.where(F.col("_required_ok")).drop("_required_ok"),
+                (obs, ids),
+            )
+
+        comp_src, comp_err_obs = _flagged_src(
+            compiled.components_flagged, compiled.components,
+            compiled.create_ids.get("components", []), f"comperr_{run_id}",
+        )
+        rel_src, rel_err_obs = _flagged_src(
+            compiled.relations_flagged, compiled.relations,
+            compiled.create_ids.get("relations", []), f"relerr_{run_id}",
+        )
+        elements_keyed = build_element_stream(comp_src, rel_src, compiled.deletes)
+
+        # Keyed write: partitioned by (data_source, shard_id) — the Kafka
+        # partition-ordering contract; files land pre-clustered per stream.
+        part_cols = ["data_source", "shard_id"]
+
+        # Topology-element sinks are APPEND (at-least-once): a crashed run may
+        # re-deliver elements on resume — exactly the reference's Kafka acks
+        # semantics; downstream is a last-writer-wins upsert keyed external_id
+        # (ReplacingMergeTree / topology intake), so re-delivery is a refresh,
+        # not corruption.
+        # Counting rides the write via observe(): ONE action per sink instead
+        # of count+write double execution (matters at both ends of the scale:
+        # small-job floor locally, double scans at 100 TB).
+        el_obs = Observation(f"elements_{run_id}")
+        sinks.append(
+            elements_keyed.observe(
+                el_obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.when(F.col("element_kind") == "component", 1).otherwise(0)).alias("nc"),
+                F.sum(F.when(F.col("element_kind") == "relation", 1).otherwise(0)).alias("nr"),
+                F.sum(F.when(F.col("element_kind") == "delete", 1).otherwise(0)).alias("nd"),
+            ),
+            "topology_elements",
+            partition_by=part_cols,
+        )
+        got = el_obs.get
+        sink_counts["topology_elements"] = got["n"]
+        sink_counts["topology_components"] = int(got["nc"] or 0)
+        sink_counts["topology_relations"] = int(got["nr"] or 0)
+        sink_counts["topology_deletes"] = int(got["nd"] or 0)
+        _mark("elements_write")
+
+        # ---- A6 + R6 + K6 run off ONE unified landed element stream
+        # (publish_element_stream — shared with the streaming flagship).
+        sink_counts.update(
+            publish_element_stream(
+                spark, sinks, run_id,
+                api_keys=api_keys, default_api_key=default_api_key,
+                elements_sink="topology_elements", part_cols=part_cols,
+            )
+        )
+        _mark("publish_envelopes_streams_intake")
+
+        # Metadata publisher analog (metadata_publisher.go:48-129): compacted
+        # snapshot of live mappings, tombstones for removed ones. Snapshot-
+        # change gate (cache.go:129-182): an unchanged snapshot skips the
+        # republish — deep equality, not identity.
+        from ..operators.metadata import metadata_tombstones, stream_metadata
+        from ..sources.settings import snapshot_changed
+
+        from ..operators.routing import with_kafka_key, with_topic
+
+        if snapshot_changed(previous_mappings, mappings) or not sinks.exists(
+            "stream_metadata"
+        ):
+            # attr-driven routing through the shared exporter path: records
+            # resolve their topic + message key from stskafka.* attrs (K1/R4)
+            meta_routed = with_kafka_key(
+                with_topic(stream_metadata(spark, mappings),
+                           default_topic="sts_topology_stream"),
+                default_key_col="data_source",
+            )
+            sinks.overwrite(meta_routed, "stream_metadata", partition_by=["topic"])
+        # record-error counts were observed on the element writes above —
+        # materialize the tiny summary table driver-side, no extra scan
+        err_rows = []
+        for pair in (comp_err_obs, rel_err_obs):
+            if pair is None:
+                continue
+            obs, ids = pair
+            got = obs.get
+            for i, ds in enumerate(ids):
+                n = int(got[f"e{i}"] or 0)
+                if n > 0:
+                    err_rows.append(
+                        (ds, "logs", "required output expression evaluated to null", n)
+                    )
+        # zero errors (the common case) skips the commit entirely: an empty
+        # append still paid a full txlog write+commit round trip (~0.3s of
+        # data-invariant driver tail per run); the reference likewise emits
+        # error records only when errors exist
+        if err_rows:
+            sinks.append(
+                local_frame(
+                    spark, err_rows,
+                    "data_source string, signal string, error string, error_count long",
+                ),
+                "mapping_errors",
+                partition_by=None,
+            )
+        sink_counts["mapping_errors"] = len(err_rows)
+        _mark("mapping_errors_write")
+
+        # ---- tombstones for removed mappings (R5); count is known driver-side
+        # (4 shards per removed mapping), no extra job when nothing was removed
+        removed = diff_settings(previous_mappings, mappings) if previous_mappings else []
+        if removed:
+            sinks.append(removal_tombstones(spark, removed), "tombstones", partition_by=None)
+            # metadata tombstones ride the same removal event
+            # (metadata_publisher.go PublishTombstones)
+            sinks.append(
+                metadata_tombstones(spark, removed), "metadata_tombstones",
+                partition_by=None,
+            )
+        sink_counts["tombstones"] = 4 * len(removed)
+        sink_counts["metadata_tombstones"] = len(removed)
+        _mark("tombstones_metadata")
+
+        # ---- PUBLISH the staged logs: one atomic commit makes this run's
+        # rows visible; everything before this point was audit. The crash
+        # window between publish and the manifest record at the end of the
+        # run is healed (rolled back) at the next run's start.
+        logs_pending.publish()
+        _mark("logs_publish")
+
         sink_counts["otel_resources"] = f_res.result()
         sink_counts["rollup_host_window"] = f_roll.result()
         stats = f_stats.result()
@@ -568,7 +572,6 @@ def run_pipeline(
     # and every future run would rescan the input for it.
     by_part = {r.lineage_partition: r for r in stats}
     manifest.record(
-        spark,
         [
             {
                 "run_id": run_id,

@@ -19,9 +19,14 @@ Layout (everything under one table root):
 
 Commit file: {"op", "meta", "schema", "add": [relpaths], "remove":
 [relpaths]}. The live file set is the log replay: fold add/remove in
-version order. Readers load exactly the live files (hive-style
-partition columns recovered via basePath), so they NEVER see
-in-flight writes — snapshot isolation without locks.
+version order. The table schema lives in the log too: the replay folds
+the commit schemas into their union (fields in first-seen order, a field
+added by a later commit appended), which is additive schema evolution —
+a column added later reads as NULL for older files. Readers load
+exactly the live files with that schema (hive-style partition columns
+recovered via basePath), so they NEVER see in-flight writes — snapshot
+isolation without locks — and never open a data file just to learn the
+schema.
 
 Guarantees (and how):
 - **Atomic commit**: the commit file is staged to a temp name and
@@ -46,7 +51,7 @@ Guarantees (and how):
 At 100 TB the log lists file names, not data — the same driver-side
 scale as Delta/Iceberg metadata. Like Delta's _last_checkpoint, every
 CHECKPOINT_EVERY-th commit also writes a checkpoint of the replayed
-state (live file set + schema), so snapshot() replays only the commits
+state (live file set + union schema), so snapshot() replays only the commits
 after the newest checkpoint — O(1) in table age instead of O(commits),
 which is what keeps a long-lived sink (one commit per run, thousands of
 runs) readable without a full log scan. Checkpoints are derived data:
@@ -71,6 +76,31 @@ CHECKPOINT_EVERY = 16
 
 class CommitConflict(RuntimeError):
     """Another writer claimed the commit version first."""
+
+
+def _union_schema(table: str | None, commit: str | None) -> str | None:
+    """Fold one commit's schema json into the table schema json: the
+    fields the table lacks are appended, in the commit's order. Spark's
+    own `StructType.json()` form, so an unchanged schema folds by string
+    compare."""
+    if table is None or commit is None or commit == table:
+        return table or commit
+    fields = json.loads(table)["fields"]
+    names = {f["name"] for f in fields}
+    added = [f for f in json.loads(commit)["fields"] if f["name"] not in names]
+    if not added:
+        return table
+    return json.dumps(
+        {"fields": fields + added, "type": "struct"},
+        separators=(",", ":"), sort_keys=True,
+    )
+
+
+def _hive_columns(rel: str) -> tuple[str, ...]:
+    """Hive partition column names along a file's relative path."""
+    return tuple(
+        seg.split("=", 1)[0] for seg in rel.split(os.sep)[:-1] if "=" in seg
+    )
 
 
 class PendingCommit:
@@ -155,7 +185,9 @@ class TxLogTable:
         live, schema = self._replay(at_version=version)
         tmp = os.path.join(self._log_dir(), f"_ckpt_tmp_{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
-            json.dump({"live": live, "schema": schema}, f)
+            # "union_schema", not "schema": checkpoints that hold only the
+            # latest commit's schema lack the key and fall back to a replay
+            json.dump({"live": live, "union_schema": schema}, f)
         os.replace(tmp, self._checkpoint_path(version))
 
     def _replay(self, at_version: int | None = None) -> tuple[list[str], str | None]:
@@ -169,11 +201,11 @@ class TxLogTable:
                 live.pop(p, None)
             for p in rec.get("add", []):
                 live[p] = None
-            schema = rec.get("schema") or schema
+            schema = _union_schema(schema, rec.get("schema"))
         return list(live), schema
 
     def snapshot(self, at_version: int | None = None) -> tuple[list[str], str | None]:
-        """(live relpaths in first-added order, latest schema json),
+        """(live relpaths in first-added order, union schema json),
         starting from the newest usable checkpoint and replaying only the
         commits after it. `at_version` gives time travel."""
         base = [
@@ -187,7 +219,7 @@ class TxLogTable:
             with open(self._checkpoint_path(start)) as f:
                 ckpt = json.load(f)
             live: dict[str, None] = dict.fromkeys(ckpt["live"])
-            schema = ckpt.get("schema")
+            schema = ckpt["union_schema"]
         except (OSError, ValueError, KeyError):
             return self._replay(at_version)  # torn checkpoint: full replay
         for v in self.versions():
@@ -199,7 +231,7 @@ class TxLogTable:
                 live.pop(p, None)
             for p in rec.get("add", []):
                 live[p] = None
-            schema = rec.get("schema") or schema
+            schema = _union_schema(schema, rec.get("schema"))
         return list(live), schema
 
     def _commit(self, op: str, add: list[str], remove: list[str],
@@ -353,27 +385,21 @@ class TxLogTable:
         # conflicting-directory-structure behavior and silently drop the
         # minority layout (found by the model-based random-ops test —
         # e.g. root-level append files alongside _bucket= merge files).
-        def signature(rel: str) -> tuple[str, ...]:
-            return tuple(
-                seg.split("=", 1)[0]
-                for seg in rel.split(os.sep)[:-1]
-                if "=" in seg
-            )
-
         groups: dict[tuple[str, ...], list[str]] = {}
         for rel in files:
-            groups.setdefault(signature(rel), []).append(rel)
+            groups.setdefault(_hive_columns(rel), []).append(rel)
+        # basePath recovers hive partition columns from dir names. The log
+        # schema is the union of every commit's, so a column added by a
+        # later append reads as null for older files, with no footer
+        # inference job; a log with no schema infers one (mergeSchema).
+        reader = spark.read.option("basePath", self.root)
+        if schema_json is None:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
         dfs = []
         for rels in groups.values():
-            paths = [os.path.join(self.root, p) for p in rels]
-            # basePath recovers hive partition columns from dir names;
-            # mergeSchema unions file schemas so a column added by a
-            # later append reads as null for older files
-            dfs.append(
-                spark.read.option("basePath", self.root)
-                .option("mergeSchema", "true")
-                .parquet(*paths)
-            )
+            dfs.append(reader.parquet(*[os.path.join(self.root, p) for p in rels]))
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
@@ -537,7 +563,8 @@ class TxLogTable:
         removed."""
         import math
 
-        live, _schema = self.snapshot()
+        live, schema = self.snapshot()
+        fields = StructType.fromJson(json.loads(schema)).fields if live else []
         by_dir: dict[str, list[str]] = {}
         for rel in live:
             by_dir.setdefault(os.path.dirname(rel), []).append(rel)
@@ -552,7 +579,11 @@ class TxLogTable:
             n_out = max(1, math.ceil(total / target_file_bytes))
             if n_out >= len(rels):
                 continue  # already at or below the target layout
-            df = spark.read.parquet(*paths).coalesce(n_out)
+            # the log's data schema, not one file's footer: a column that
+            # only later files carry must survive the rewrite
+            hive = set(_hive_columns(rels[0]))
+            data_schema = StructType([f for f in fields if f.name not in hive])
+            df = spark.read.schema(data_schema).parquet(*paths).coalesce(n_out)
             staged = self.stage(df, partition_by=None, op="compact")
             if part_dir:
                 os.makedirs(os.path.join(self.root, part_dir), exist_ok=True)

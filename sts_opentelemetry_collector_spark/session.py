@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -64,6 +64,24 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A config-scale frame built on the driver (a few rows of metadata
+    or counters) with DDL `schema`: an Arrow table becomes a local
+    relation, which launches no job and starts no Python worker, unlike a
+    frame of pickled rows (measured 0.5 s vs 0.17 s per one-file write on
+    4 cores). A pyarrow Table takes the Arrow path whatever the session's
+    arrow confs say. One partition, so a write lands one file."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct).coalesce(1)
 
 
 def ensure_semantics_confs(spark: SparkSession) -> None:

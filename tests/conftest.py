@@ -2,6 +2,9 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pytest
 
@@ -36,3 +39,29 @@ def webtext(spark, webtext_dir):
     import os as _os
 
     return spark.read.parquet(_os.path.join(webtext_dir, "webtext.parquet"))
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """`with spark_jobs() as jobs: ...` counts the Spark jobs the block
+    launches from the calling thread into `jobs.n`: the block runs under
+    its own job group, and the count is read once the listener bus has
+    delivered every job-start event."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def count():
+        group = f"spark_jobs-{uuid.uuid4().hex}"
+        keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+        prev = {k: sc.getLocalProperty(k) for k in keys}
+        jobs = SimpleNamespace(n=None)
+        sc.setJobGroup(group, "counted block")
+        try:
+            yield jobs
+        finally:
+            for k, v in prev.items():
+                sc.setLocalProperty(k, v)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

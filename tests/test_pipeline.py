@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from sts_opentelemetry_collector_spark.plans.pipeline import run_pipeline
 from sts_opentelemetry_collector_spark.plans.sinks import SinkCatalog
@@ -197,7 +198,7 @@ def test_crashed_run_rollup_merge_healed(spark, webtext_dir, tmp_path):
     )
 
     manifest = Manifest(os.path.join(out, "manifest.parquet"))
-    healed = _heal_unmanifested_runs(spark, sinks, manifest)
+    healed = _heal_unmanifested_runs(sinks, manifest)
     assert "deadbeefcafe" in healed
     assert (
         sinks.read(spark, "rollup_host_window").agg(F_.sum("page_count")).first()[0]
@@ -324,3 +325,162 @@ def test_record_errors_counted_via_observe(spark, webtext_dir, tmp_path):
             for r in sinks.read(spark, "mapping_errors").collect()}
     assert errs.get("null-ident-mapping") == 2000  # every row errors
     assert summary["sink_counts"]["mapping_errors"] == 1
+
+
+def _manifest_rows(run_id, parts, split):
+    return [
+        {"run_id": run_id, "lineage_partition": p, "input_split": split,
+         "row_count": 10 * p, "parse_failures": 0}
+        for p in parts
+    ]
+
+
+def test_manifest_reads_spark_written_and_driver_written_files(spark, tmp_path):
+    """A manifest directory Spark wrote (the earlier layout: a part file
+    plus _SUCCESS and .crc files) stays readable next to the files the
+    driver writes now, by the manifest itself and by Spark."""
+    from pyspark.sql.types import DataType
+
+    from sts_opentelemetry_collector_spark.plans.lineage import MANIFEST_SCHEMA, Manifest
+
+    path = str(tmp_path / "manifest.parquet")
+    spark.createDataFrame(
+        [("old", 0, "a", 5, 0), ("old", 1, "b", 6, 1)],
+        "run_id string, lineage_partition int, input_split string, "
+        "row_count long, parse_failures long",
+    ).withColumn("completed_at", F.current_timestamp()).repartition(1).write.mode(
+        "append"
+    ).parquet(path)
+    manifest = Manifest(path)
+    manifest.record(_manifest_rows("new", [2, 3], "a"))
+
+    assert manifest.completed_partitions(input_split="a") == {0, 2, 3}
+    assert manifest.completed_partitions(input_split="b") == {1}
+    assert manifest.completed_partitions() == {0, 1, 2, 3}
+    assert manifest.run_ids() == {"old", "new"}
+
+    want = DataType.fromDDL(MANIFEST_SCHEMA).simpleString()
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(files) == 2
+    for f in files:  # each layout on its own: the same names and types
+        assert spark.read.parquet(os.path.join(path, f)).schema.simpleString() == want
+    both = spark.read.parquet(path)
+    assert both.schema.simpleString() == want
+    assert both.count() == 4
+
+
+def test_manifest_launches_no_spark_jobs(spark, tmp_path, spark_jobs):
+    from sts_opentelemetry_collector_spark.plans.lineage import Manifest
+
+    manifest = Manifest(str(tmp_path / "manifest.parquet"))
+    with spark_jobs() as jobs:
+        manifest.record(_manifest_rows("r1", [0, 1], "a"))
+        assert manifest.completed_partitions(input_split="a") == {0, 1}
+        assert manifest.run_ids() == {"r1"}
+    assert jobs.n == 0
+
+
+def test_crash_during_element_write_converges(spark, webtext_dir, tmp_path, monkeypatch):
+    """The resources MERGE, the rollup merge and the partition stats read
+    only the staged logs and run beside the mapping chain. A crash in the
+    element write after both merges committed must converge on rerun to
+    an uninterrupted run, and run_pipeline must never return or raise
+    while one of those jobs is still running."""
+    import threading
+    import time
+
+    from sts_opentelemetry_collector_spark.plans import pipeline
+
+    wt = _webtext_path(webtext_dir)
+    ref_out, out = str(tmp_path / "ref"), str(tmp_path / "crash")
+    run_pipeline(spark, wt, ref_out, n_lineage_buckets=4)
+
+    lock = threading.Lock()
+    running: list[str] = []
+    merged = {"upsert": threading.Event(), "merge_aggregate": threading.Event()}
+
+    def tracked(name, fn):
+        def call(*args, **kwargs):
+            with lock:
+                running.append(name)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                if name in merged:
+                    merged[name].set()
+                time.sleep(1.0)  # still in flight when the chain raises
+                with lock:
+                    running.remove(name)
+        return call
+
+    for name in merged:
+        monkeypatch.setattr(SinkCatalog, name, tracked(name, getattr(SinkCatalog, name)))
+    stats = pipeline.partition_stats
+
+    def tracked_stats(pages):
+        df = stats(pages)
+        df.collect = tracked("stats", df.collect)
+        return df
+
+    monkeypatch.setattr(pipeline, "partition_stats", tracked_stats)
+    append = SinkCatalog.append
+    crash = [True]
+
+    def crashing_append(self, df, name, *args, **kwargs):
+        if name == "topology_elements" and crash[0]:
+            assert all(e.wait(60) for e in merged.values()), "tail merges never committed"
+            raise RuntimeError("injected crash")
+        return append(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(SinkCatalog, "append", crashing_append)
+
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, wt, out, n_lineage_buckets=4)
+    assert running == []
+    crash[0] = False
+    summary = run_pipeline(spark, wt, out, n_lineage_buckets=4)
+    assert running == []
+    assert summary["rows"] == 2000
+
+    ref, got = (SinkCatalog(os.path.join(o, "sinks")) for o in (ref_out, out))
+
+    def rollup(c):
+        return {(r.host, r.window_start): r.page_count
+                for r in c.read(spark, "rollup_host_window").collect()}
+
+    def rows(c, name):
+        return sorted(str(r) for r in c.read(spark, name).collect())
+
+    assert rollup(got) == rollup(ref)
+    assert rows(got, "otel_resources") == rows(ref, "otel_resources")
+    assert rows(got, "otel_logs") == rows(ref, "otel_logs")
+
+
+def test_config_frames_are_arrow_local_relations(spark):
+    """The driver-built config-scale frames are Arrow local relations,
+    whatever the session's Arrow conf says: no pickled-row RDD scan, so
+    no Python worker and no job until the write."""
+    from sts_opentelemetry_collector_spark.operators.aggregate import telemetry_counters
+    from sts_opentelemetry_collector_spark.operators.metadata import (
+        metadata_tombstones,
+        stream_metadata,
+    )
+    from sts_opentelemetry_collector_spark.operators.routing import removal_tombstones
+
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        frames = {
+            "telemetry": telemetry_counters(spark, "r", {"otel_logs": 3}, 0, 1),
+            "stream_metadata": stream_metadata(spark, default_mappings()),
+            "tombstones": removal_tombstones(spark, ["m1"]),
+            "metadata_tombstones": metadata_tombstones(spark, ["m1"]),
+        }
+        for name, df in frames.items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
+            assert df.rdd.getNumPartitions() == 1, name
+        assert frames["tombstones"].count() == 4
+    finally:
+        spark.conf.set(conf, prev)

@@ -272,6 +272,45 @@ def test_additive_schema_evolution_on_read(spark, tmp_path):
     assert got == {1: None, 2: "x"}
 
 
+def test_compact_keeps_columns_added_later(spark, tmp_path, monkeypatch):
+    """Compaction rewrites with the log's schema, not one file's footer:
+    a column only the later append carries survives, with its values.
+    Sequential uuids put the older (narrower) file first in the read."""
+    import itertools
+    from types import SimpleNamespace
+
+    from sts_opentelemetry_collector_spark.plans import txlog
+
+    ids = itertools.count(1)
+    monkeypatch.setattr(txlog, "uuid", SimpleNamespace(
+        uuid4=lambda: SimpleNamespace(hex=f"{next(ids):032x}")
+    ))
+    tbl = txlog.TxLogTable(str(tmp_path / "t"))
+    tbl.append(spark.createDataFrame([(1,)], "id long").coalesce(1))
+    tbl.append(spark.createDataFrame([(2, "x")], "id long, extra string").coalesce(1))
+    assert tbl.compact(spark, target_file_bytes=1 << 30) == 2
+    assert len(tbl.snapshot()[0]) == 1
+    got = tbl.read(spark)
+    assert got.columns == ["id", "extra"]
+    assert {r.id: r.extra for r in got.collect()} == {1: None, 2: "x"}
+
+
+def test_read_plans_without_spark_jobs(spark, tmp_path, spark_jobs):
+    """The table schema comes from the log: building a read frame over
+    files of two schemas and two layouts launches no footer-inference
+    job; the action afterwards does launch jobs (the counter works)."""
+    tbl = TxLogTable(str(tmp_path / "t"))
+    tbl.append(spark.createDataFrame([(1, 0)], "id long, p int"), partition_by=["p"])
+    tbl.append(spark.createDataFrame([(2, "x")], "id long, extra string"))
+    with spark_jobs() as jobs:
+        df = tbl.read(spark)
+    assert jobs.n == 0
+    with spark_jobs() as jobs:
+        rows = {r.id: (r.extra, r.p) for r in df.collect()}
+    assert jobs.n > 0
+    assert rows == {1: (None, 0), 2: ("x", None)}
+
+
 def test_txlog_model_random_ops(spark, tmp_path):
     """Model-based pin for the transaction log: a seeded random sequence
     of append / overwrite / merge_upsert / rollback-tip / vacuum /
