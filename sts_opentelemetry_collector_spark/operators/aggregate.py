@@ -434,11 +434,6 @@ def usage_bytes(df: DataFrame, cols: list[str], group_by: list[str] | None = Non
     return g.agg(F.sum(total).alias("usage_bytes"), F.count(F.lit(1)).alias("record_count"))
 
 
-def per_sink_counts(routed: dict[str, DataFrame]) -> dict[str, int]:
-    """Per-sink routed-row counts — the north rule's count-equality check."""
-    return {name: df.count() for name, df in routed.items()}
-
-
 def telemetry_counters(
     spark: SparkSession,
     run_id: str,

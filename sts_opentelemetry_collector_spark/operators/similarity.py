@@ -26,16 +26,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
+# the embeddings file is one parquet row group: unspread, the per-vector
+# math would run as ONE task
+from .textops import spread
+
 DIM = 64
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session parallelism: the driver's
-    embeddings file is a single parquet row group, so an unspread scan
-    runs as ONE task and the per-vector math serializes on one core (same
-    fix as textops.spread; at 100 TB inputs arrive pre-split and this is
-    a no-op to remove)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _dot(a, b):
@@ -299,7 +294,7 @@ def ivf_assignments(embeddings: DataFrame, n_centroids: int = 8) -> DataFrame:
     cents = embeddings.where(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
     )
-    scored = _spread(embeddings).crossJoin(F.broadcast(cents)).select(
+    scored = spread(embeddings).crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "embedding",
         "centroid_id",
@@ -346,7 +341,7 @@ def kmeans_refine(embeddings: DataFrame, n_centroids: int = 8) -> DataFrame:
             lambda s: s["mval"],
         ).alias("cv")
     )
-    scored = _spread(embeddings).crossJoin(F.broadcast(cents)).select(
+    scored = spread(embeddings).crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "centroid_id",
         F.round(_cos_arrow(F.col("embedding"), F.col("cv")), 4).alias("sim"),
@@ -430,7 +425,7 @@ def near_dup_pairs_lsh(
     # dot per pair instead of dot + two norms. Both the normalized vector
     # and every band's bucket come from the Arrow kernels — one vectorized
     # numpy pass each, exact fold semantics (see the kernel block above).
-    base = _spread(embeddings).select(
+    base = spread(embeddings).select(
         "vec_id",
         *extra_cols,
         _normalize_arrow(F.col("embedding")).alias("nv"),
@@ -550,7 +545,7 @@ def pq_codes(embeddings: DataFrame, m: int = 4, k: int = 8,
     (the broadcast nested loop is the k-row codebook side)."""
     sub = dim // m
     books = pq_codebooks(embeddings, m, k, dim)
-    subvecs = _spread(embeddings).select(
+    subvecs = spread(embeddings).select(
         "vec_id",
         F.explode(
             F.array(

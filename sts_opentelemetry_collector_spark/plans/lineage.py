@@ -4,11 +4,14 @@ The reference's analog is its internal telemetry (counters per mapping/
 signal, metrics/metrics.go:58-150) plus Kafka's at-least-once offsets. In a
 batch job over an Iceberg/parquet table, resumability means: deterministic
 input partitioning + a manifest of completed partitions + anti-join on
-rerun. Idempotence comes from the txlog write-audit-publish flow plus this
-manifest: a run's sink commits are tagged with its run id, and a run whose
-commits landed but whose partitions never reached the manifest is rolled
-back at the next run's start (plans/pipeline.py), so a rerun of a
-half-finished run never double-counts.
+rerun. Exactly-once comes from the txlog write-audit-publish flow plus
+this manifest: every commit a rerun would repeat (the logs, element and
+record-error appends, the additive rollup merge) carries the run id, and a
+run whose commits landed but whose partitions never reached the manifest is
+rolled back at the next run's start (plans/pipeline.py), so a rerun of a
+half-finished run never double-counts. The streaming twin records each
+micro-batch as its own input split, so a redelivered micro-batch is skipped
+or healed the same way.
 
 The manifest is a directory of small parquet files, one per recorded run,
 read and written on the driver with pyarrow: a handful of rows per run is

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
@@ -43,11 +44,12 @@ from .sinks import SinkCatalog
 
 
 # sinks whose run-tagged commits must invert when a run misses the
-# manifest: the logs append (rerun would double rows) and the rollup's
-# ADDITIVE merge (rerun would double-count its windows). The resources
-# MERGE needs no healing — re-merging the same content-addressed
-# identities is a last-writer-wins refresh, not duplication.
-HEALED_SINKS = ("otel_logs", "rollup_host_window")
+# manifest: the logs, element and record-error appends (a rerun would
+# re-append their rows) and the rollup's ADDITIVE merge (a rerun would
+# double-count its windows). The resources MERGE needs no healing —
+# re-merging the same content-addressed identities is a last-writer-wins
+# refresh, not duplication.
+HEALED_SINKS = ("otel_logs", "topology_elements", "mapping_errors", "rollup_host_window")
 
 
 def _heal_unmanifested_runs(
@@ -92,9 +94,7 @@ def build_element_stream(
     stream — exactly the reference's topology stream topic, whose messages
     carry every element kind (including TopologyStreamRemove) per
     (dataSource, shard) (spec/topo_stream.proto, message_builder.go).
-    Unify (element_kind column), dedup by element identity, FNV-shard.
-    Shared by the batch pipeline and the streaming foreachBatch twin so the
-    element-stream semantics cannot drift between modes."""
+    Unify (element_kind column), dedup by element identity, FNV-shard."""
     comp_u = components.withColumn("element_kind", F.lit("component"))
     rel_u = relations.withColumn("element_kind", F.lit("relation"))
     unified = comp_u.unionByName(rel_u, allowMissingColumns=True)
@@ -112,19 +112,15 @@ def publish_element_stream(
     collection_ts: str,
     api_keys: dict[str, str] | None = None,
     default_api_key: str = "default-key",
-    elements_sink: str = "topology_elements",
-    part_cols: list[str] | None = None,
 ) -> dict[str, int]:
     """A6 + R6 + K6 + per-element payloads off ONE unified landed element
-    stream — the publisher stage shared by the batch pipeline and the
-    streaming flagship (so envelope/intake/lifecycle semantics cannot
-    drift between modes). Topology elements are dimension-scale (bounded
+    stream — the publisher stage, run once per batch run and once per
+    streaming drain. Topology elements are dimension-scale (bounded
     by the mapped entity universe, not the page count), so reading the
     just-landed sinks back is a pruned scan over tiny tables — no
     recompute of the page scan. Returns per-sink counts."""
-    part_cols = part_cols or ["data_source", "shard_id"]
     counts: dict[str, int] = {}
-    elements_back = sinks.read(spark, elements_sink)
+    elements_back = sinks.read(spark, "topology_elements")
     payload = (
         F.when(
             F.col("element_kind") == "component",
@@ -212,7 +208,7 @@ def publish_element_stream(
         sinks.append(
             envelopes.observe(env_obs, F.count(F.lit(1)).alias("n")),
             "topology_envelopes",
-            partition_by=part_cols,
+            partition_by=["data_source", "shard_id"],
         )
         return {"topology_envelopes": env_obs.get["n"]}
 
@@ -252,8 +248,7 @@ def upsert_resources(
     (exporter_resources.go:32-46 content hash, :141-144 ReplacingMergeTree
     ORDER BY (ResourceRef, ts)) via the txlog partition-pruned upsert:
     re-observed resources refresh their row, new ones insert, untouched
-    buckets' files stay byte-identical. Shared by the batch pipeline and
-    the streaming twin so the resource-identity semantics cannot drift.
+    buckets' files stay byte-identical.
 
     Scale shape: distinct on the 4 resource attr columns FIRST (map-side
     partial agg collapses the page-scale stream to dimension scale)
@@ -278,20 +273,28 @@ def upsert_resources(
     return sinks.upsert(resources_table(rec), sink_name, keys=["resource_ref"])
 
 
-def run_pipeline(
+def _process_batch(
     spark: SparkSession,
-    webtext_path: str,
     out_root: str,
-    mappings: MappingSet | None = None,
-    previous_mappings: MappingSet | None = None,
-    n_lineage_buckets: int = 32,
-    max_partitions_this_run: int | None = None,
-    rollup_window: str = "1 hour",
-    api_keys: dict[str, str] | None = None,
-    default_api_key: str = "default-key",
+    raw: DataFrame,
+    input_split: str,
+    mappings: MappingSet,
+    *,
+    n_lineage_buckets: int,
+    max_partitions_this_run: int | None,
+    rollup_window: str,
+    publish: Callable[[SinkCatalog, str], dict[str, int]] | None = None,
 ) -> dict:
-    """Run (or resume) the pipeline. Returns a summary dict with per-sink
-    routed-row counts, telemetry, and timing."""
+    """One input batch through the whole chain: run_pipeline calls it once
+    per run, the streaming twin once per micro-batch (the reference's
+    consume loop sends every Kafka poll down the same connector ->
+    exporter path). `raw` holds the batch's webtext pages and
+    `input_split` names them in the lineage manifest, which makes the
+    batch exactly-once: partitions the manifest records are skipped, and
+    the commits of a run that crashed before its manifest record are
+    rolled back before the batch is redone. `publish(sinks, run_id)` is
+    the run's publisher step; it runs once the elements have landed, and
+    the sink counts it returns join the summary."""
     t_start = time.time()
     stage_sec: dict[str, float] = {}
     _last = [t_start]
@@ -303,21 +306,22 @@ def run_pipeline(
 
     ensure_semantics_confs(spark)  # eval-error=>false; explicit-tag-wins
     register_sql_functions(spark)
-    mappings = mappings or default_mappings()
     sinks = SinkCatalog(os.path.join(out_root, "sinks"))
     manifest = Manifest(os.path.join(out_root, "manifest.parquet"))
     run_id = new_run_id()
+    # every commit a rerun must not repeat carries the run and its input
+    run_meta = {"run_id": run_id, "input_split": input_split}
 
     # ---- resume: which lineage partitions of THIS input batch are pending?
     # (manifest is input_split-scoped: a new ingest batch processes fully)
-    done = manifest.completed_partitions(input_split=webtext_path)
+    done = manifest.completed_partitions(input_split=input_split)
     pending = [p for p in range(n_lineage_buckets) if p not in done]
     if max_partitions_this_run is not None:
         pending = pending[:max_partitions_this_run]
     if not pending:
         return {"run_id": run_id, "pending": 0, "skipped": True}
 
-    raw = with_lineage_partition(spark.read.parquet(webtext_path), n_buckets=n_lineage_buckets)
+    raw = with_lineage_partition(raw, n_buckets=n_lineage_buckets)
     if len(pending) < n_lineage_buckets:
         raw = raw.where(F.col("lineage_partition").isin(pending))
 
@@ -353,7 +357,7 @@ def run_pipeline(
         logs.observe(logs_obs, F.count(F.lit(1)).alias("n")),
         "otel_logs",
         partition_by=None,
-        meta={"run_id": run_id, "input_split": webtext_path},
+        meta=run_meta,
         compression="snappy",
     )
     sink_counts: dict[str, int] = {"otel_logs": logs_obs.get["n"]}
@@ -387,7 +391,7 @@ def run_pipeline(
             "rollup_host_window",
             keys=["host", "window_start", "window_end"],
             sum_cols=["page_count"],
-            meta={"run_id": run_id, "input_split": webtext_path},
+            meta=run_meta,
         )
 
     def _j_stats():
@@ -451,13 +455,9 @@ def run_pipeline(
 
         # Keyed write: partitioned by (data_source, shard_id) — the Kafka
         # partition-ordering contract; files land pre-clustered per stream.
-        part_cols = ["data_source", "shard_id"]
-
-        # Topology-element sinks are APPEND (at-least-once): a crashed run may
-        # re-deliver elements on resume — exactly the reference's Kafka acks
-        # semantics; downstream is a last-writer-wins upsert keyed external_id
-        # (ReplacingMergeTree / topology intake), so re-delivery is a refresh,
-        # not corruption.
+        # The append is run-tagged like the logs commit: a run that crashed
+        # before its manifest record has it rolled back by the heal, so a
+        # rerun lands each element exactly once.
         # Counting rides the write via observe(): ONE action per sink instead
         # of count+write double execution (matters at both ends of the scale:
         # small-job floor locally, double scans at 100 TB).
@@ -471,7 +471,8 @@ def run_pipeline(
                 F.sum(F.when(F.col("element_kind") == "delete", 1).otherwise(0)).alias("nd"),
             ),
             "topology_elements",
-            partition_by=part_cols,
+            partition_by=["data_source", "shard_id"],
+            meta=run_meta,
         )
         got = el_obs.get
         sink_counts["topology_elements"] = got["n"]
@@ -480,37 +481,10 @@ def run_pipeline(
         sink_counts["topology_deletes"] = int(got["nd"] or 0)
         _mark("elements_write")
 
-        # ---- A6 + R6 + K6 run off ONE unified landed element stream
-        # (publish_element_stream — shared with the streaming flagship).
-        sink_counts.update(
-            publish_element_stream(
-                spark, sinks, run_id,
-                api_keys=api_keys, default_api_key=default_api_key,
-                elements_sink="topology_elements", part_cols=part_cols,
-            )
-        )
-        _mark("publish_envelopes_streams_intake")
+        if publish is not None:
+            sink_counts.update(publish(sinks, run_id))
+            _mark("publish")
 
-        # Metadata publisher analog (metadata_publisher.go:48-129): compacted
-        # snapshot of live mappings, tombstones for removed ones. Snapshot-
-        # change gate (cache.go:129-182): an unchanged snapshot skips the
-        # republish — deep equality, not identity.
-        from ..operators.metadata import metadata_tombstones, stream_metadata
-        from ..sources.settings import snapshot_changed
-
-        from ..operators.routing import with_kafka_key, with_topic
-
-        if snapshot_changed(previous_mappings, mappings) or not sinks.exists(
-            "stream_metadata"
-        ):
-            # attr-driven routing through the shared exporter path: records
-            # resolve their topic + message key from stskafka.* attrs (K1/R4)
-            meta_routed = with_kafka_key(
-                with_topic(stream_metadata(spark, mappings),
-                           default_topic="sts_topology_stream"),
-                default_key_col="data_source",
-            )
-            sinks.overwrite(meta_routed, "stream_metadata", partition_by=["topic"])
         # record-error counts were observed on the element writes above —
         # materialize the tiny summary table driver-side, no extra scan
         err_rows = []
@@ -537,24 +511,10 @@ def run_pipeline(
                 ),
                 "mapping_errors",
                 partition_by=None,
+                meta=run_meta,
             )
         sink_counts["mapping_errors"] = len(err_rows)
         _mark("mapping_errors_write")
-
-        # ---- tombstones for removed mappings (R5); count is known driver-side
-        # (4 shards per removed mapping), no extra job when nothing was removed
-        removed = diff_settings(previous_mappings, mappings) if previous_mappings else []
-        if removed:
-            sinks.append(removal_tombstones(spark, removed), "tombstones", partition_by=None)
-            # metadata tombstones ride the same removal event
-            # (metadata_publisher.go PublishTombstones)
-            sinks.append(
-                metadata_tombstones(spark, removed), "metadata_tombstones",
-                partition_by=None,
-            )
-        sink_counts["tombstones"] = 4 * len(removed)
-        sink_counts["metadata_tombstones"] = len(removed)
-        _mark("tombstones_metadata")
 
         # ---- PUBLISH the staged logs: one atomic commit makes this run's
         # rows visible; everything before this point was audit. The crash
@@ -576,7 +536,7 @@ def run_pipeline(
             {
                 "run_id": run_id,
                 "lineage_partition": p,
-                "input_split": webtext_path,
+                "input_split": input_split,
                 "row_count": by_part[p].row_count if p in by_part else 0,
                 "parse_failures": by_part[p].parse_failures if p in by_part else 0,
             }
@@ -588,7 +548,8 @@ def run_pipeline(
         run_id,
         produced={k: v for k, v in sink_counts.items()},
         mapping_errors=len(compiled.errors),
-        mappings_removed=len(removed),
+        # one metadata tombstone per removed mapping
+        mappings_removed=sink_counts.get("metadata_tombstones", 0),
     )
     sinks.append(telemetry, "telemetry", partition_by=None)
     _mark("manifest_telemetry")
@@ -603,8 +564,76 @@ def run_pipeline(
         "parse_failures": sum(r.parse_failures for r in stats),
         "sink_counts": sink_counts,
         "mapping_errors": [e["data_source"] for e in compiled.errors],
-        "removed_mappings": removed,
         "elapsed_sec": elapsed,
         "stage_sec": stage_sec,
         "pages_per_sec": total_rows / elapsed if elapsed > 0 else None,
     }
+
+
+def run_pipeline(
+    spark: SparkSession,
+    webtext_path: str,
+    out_root: str,
+    mappings: MappingSet | None = None,
+    previous_mappings: MappingSet | None = None,
+    n_lineage_buckets: int = 32,
+    max_partitions_this_run: int | None = None,
+    rollup_window: str = "1 hour",
+    api_keys: dict[str, str] | None = None,
+    default_api_key: str = "default-key",
+) -> dict:
+    """Run (or resume) the pipeline. Returns a summary dict with per-sink
+    routed-row counts, telemetry, and timing."""
+    mappings = mappings or default_mappings()
+    removed = diff_settings(previous_mappings, mappings) if previous_mappings else []
+
+    def publish(sinks: SinkCatalog, run_id: str) -> dict[str, int]:
+        # ---- A6 + R6 + K6 run off ONE unified landed element stream
+        counts = publish_element_stream(
+            spark, sinks, run_id, api_keys=api_keys, default_api_key=default_api_key,
+        )
+
+        # Metadata publisher analog (metadata_publisher.go:48-129): compacted
+        # snapshot of live mappings, tombstones for removed ones. Snapshot-
+        # change gate (cache.go:129-182): an unchanged snapshot skips the
+        # republish — deep equality, not identity.
+        from ..operators.metadata import metadata_tombstones, stream_metadata
+        from ..operators.routing import with_kafka_key, with_topic
+        from ..sources.settings import snapshot_changed
+
+        if snapshot_changed(previous_mappings, mappings) or not sinks.exists(
+            "stream_metadata"
+        ):
+            # attr-driven routing through the shared exporter path: records
+            # resolve their topic + message key from stskafka.* attrs (K1/R4)
+            meta_routed = with_kafka_key(
+                with_topic(stream_metadata(spark, mappings),
+                           default_topic="sts_topology_stream"),
+                default_key_col="data_source",
+            )
+            sinks.overwrite(meta_routed, "stream_metadata", partition_by=["topic"])
+
+        # ---- tombstones for removed mappings (R5); count is known driver-side
+        # (4 shards per removed mapping), no extra job when nothing was removed
+        if removed:
+            sinks.append(removal_tombstones(spark, removed), "tombstones", partition_by=None)
+            # metadata tombstones ride the same removal event
+            # (metadata_publisher.go PublishTombstones)
+            sinks.append(
+                metadata_tombstones(spark, removed), "metadata_tombstones",
+                partition_by=None,
+            )
+        counts["tombstones"] = 4 * len(removed)
+        counts["metadata_tombstones"] = len(removed)
+        return counts
+
+    summary = _process_batch(
+        spark, out_root, spark.read.parquet(webtext_path), webtext_path, mappings,
+        n_lineage_buckets=n_lineage_buckets,
+        max_partitions_this_run=max_partitions_this_run,
+        rollup_window=rollup_window,
+        publish=publish,
+    )
+    if not summary.get("skipped"):
+        summary["removed_mappings"] = removed
+    return summary

@@ -14,7 +14,6 @@ identifiers; removals fan out to tombstones in routing.py (R5).
 from __future__ import annotations
 
 import json
-import os
 from typing import Any
 
 from ..config import (
@@ -194,15 +193,3 @@ def snapshot_changed(previous: MappingSet | None, current: MappingSet) -> bool:
         tuple(current.components) != tuple(previous.components)
         or tuple(current.relations) != tuple(previous.relations)
     )
-
-
-def save_mapping_set(ms: MappingSet, path: str) -> None:
-    """Persist a snapshot manifest (what ran) for the next run's diff."""
-    doc = {
-        "version": ms.version,
-        "components": [m.identifier for m in ms.components],
-        "relations": [m.identifier for m in ms.relations],
-    }
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(doc, f, indent=2)

@@ -186,10 +186,6 @@ def host_topology_pandas() -> pd.DataFrame:
     )
 
 
-def load_webtext(spark, path: str):
-    return spark.read.parquet(path)
-
-
 def dims(spark):
     """The two broadcast-join dimensions as Spark DataFrames."""
     lang_map = spark.createDataFrame(lang_map_pandas())

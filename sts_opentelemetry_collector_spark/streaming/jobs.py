@@ -7,6 +7,9 @@ twin here:
 - ingest: file-source readStream over the webtext directory (stand-in for
   Kafka/OTLP); Trigger.AvailableNow processes the backlog then stops —
   the batch/stream unification point.
+- the flagship chain: run_pipeline_streaming runs each micro-batch through
+  the batch pipeline's own kernel, record-error counts, heal and lineage
+  manifest included.
 - dedup D1-D3: dropDuplicatesWithinWatermark on the projection key — the
   reference's TTL'd dedup cache (deduplicator.go:151-205) becomes
   watermark-bounded state.
@@ -130,127 +133,78 @@ def run_pipeline_streaming(
     mappings=None,
     max_files: int = 4,
 ) -> dict:
-    """Always-on mode: the flagship parse -> enrich -> map -> dedup ->
-    shard -> export pipeline as ONE Structured Streaming job.
+    """Always-on mode: the flagship pipeline as ONE Structured Streaming job.
 
-    foreachBatch applies the EXACT batch operators to each micro-batch —
-    the reference's Kafka consume loop (each poll = one batch through the
-    connector pipeline); the checkpoint gives exactly-once per micro-batch
-    on the file source. Cross-batch element dedup is the downstream
-    upsert's job (same at-least-once contract as the batch pipeline's
-    element sinks); the in-stream dedup twin is streaming_dedup
-    (dropDuplicatesWithinWatermark).
+    foreachBatch hands every micro-batch to the batch pipeline's kernel
+    (plans.pipeline._process_batch) — the reference's Kafka consume loop,
+    where each poll goes through the same connector -> exporter path. The
+    stream lands the batch sinks (otel_logs, topology_elements,
+    rollup_host_window, otel_resources, mapping_errors, telemetry) under
+    its own out_root. A micro-batch is one lineage input split,
+    `<checkpoint>#<batch_id>`, so a redelivered micro-batch is
+    exactly-once: one the manifest records is skipped, and the commits of
+    one that crashed before its manifest record are rolled back before it
+    is redone.
 
     AvailableNow drains the backlog then stops, so tests/CI can assert
     stream == batch; drop the trigger for a true always-on deployment.
 
-    After the drain, the SAME publisher stage as the batch pipeline
-    (publish_element_stream) runs over the landed element sink: envelopes
-    (A6), stream lifecycle (R6), and the per-API-key intake (K6) — so
-    every sink family exists in both modes with identical semantics and
-    the summary carries per-sink counts for the parity check. (The
+    After a drain that ran at least one micro-batch, the appended sinks
+    are compacted and the batch pipeline's publisher stage
+    (publish_element_stream) runs once over the landed elements under a
+    fresh run id: envelopes (A6), stream lifecycle (R6), and the
+    per-API-key intake (K6). A drain that ran none publishes nothing. (The
     reference publisher likewise runs over the consumed element store,
     not per Kafka poll.)
     """
     import os
 
-    from ..operators.enrich import enrich_pages
-    from ..operators.mapping import apply_mappings, register_sql_functions
-    from ..operators.parse import ATTRS_SOURCE_COLS, parse_pages, with_attrs
-    from ..plans.pipeline import build_element_stream, publish_element_stream
+    from ..plans.lineage import new_run_id
+    from ..plans.pipeline import _process_batch, publish_element_stream
     from ..plans.sinks import SinkCatalog
     from ..session import ensure_semantics_confs
     from ..sources.settings import default_mappings
-    from ..sources.webtext import dims
 
+    # the query runs its micro-batches in a session cloned at start: the
+    # semantics confs must be set before it, not in the first batch
     ensure_semantics_confs(spark)
-    register_sql_functions(spark)
     mappings = mappings or default_mappings()
     sinks = SinkCatalog(os.path.join(out_root, "sinks"))
-    lang_map, host_topology = dims(spark)
+    checkpoint = os.path.join(out_root, "checkpoint")
     batches: list[int] = []
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        pages = parse_pages(batch_df.drop("text"))
-        enriched = enrich_pages(pages, lang_map, host_topology)
-        logs = enriched.select(
-            "url", "warc_ts", "host", "path", "title", "extracted_text",
-            "lang", "lang_family", "service", "cluster", "namespace",
-        ).withColumn("ds", F.to_date("warc_ts"))
-        # stage -> read-back -> publish, like the batch flagship: the
-        # pandas-UDF parse runs ONCE per micro-batch (the mapping input
-        # reads the staged columnar files, not the UDF subtree again)
-        pending = sinks.stage(logs, "otel_logs_stream")
-        logs_back = pending.read(spark)
-
-        mi = with_attrs(
-            logs_back.select("host", "path", "service", "cluster", "namespace", "lang")
+        # a micro-batch is redelivered whole, so it is ONE lineage partition
+        _process_batch(
+            spark, out_root, batch_df, f"{checkpoint}#{batch_id}", mappings,
+            n_lineage_buckets=1, max_partitions_this_run=None,
+            rollup_window="1 hour",
         )
-        compiled = apply_mappings(
-            mi, mappings, signal="logs", attr_cols=ATTRS_SOURCE_COLS
-        )
-        elements = build_element_stream(
-            compiled.components, compiled.relations, compiled.deletes
-        )
-        sinks.append(
-            elements, "topology_elements_stream",
-            partition_by=["data_source", "shard_id"],
-        )
-        # incremental rollup twin: this micro-batch's partials SUM into
-        # the (host, window) rollup. foreachBatch redelivers a batch
-        # after a crash and the additive merge is NOT idempotent, so the
-        # commit is tagged with batch_id and skipped on redelivery — the
-        # Delta txnAppId/txnVersion exactly-once pattern for foreachBatch.
-        from ..operators.aggregate import windowed_rollup
-
-        already = any(
-            c.get("meta", {}).get("batch_id") == batch_id
-            for c in sinks.commits("rollup_host_window_stream")
-        ) if sinks.exists("rollup_host_window_stream") else False
-        if not already:
-            partial = windowed_rollup(
-                logs_back, ts_col="warc_ts", keys=["host"],
-                window="1 hour", salt_skew=True,
-            )
-            sinks.merge_aggregate(
-                partial.select(
-                    "host", "window_start", "window_end",
-                    F.col("page_count").cast("long").alias("page_count"),
-                ),
-                "rollup_host_window_stream",
-                keys=["host", "window_start", "window_end"],
-                sum_cols=["page_count"],
-                meta={"batch_id": batch_id},
-            )
-        pending.publish()
         batches.append(batch_id)
 
     stream = read_webtext_stream(spark, webtext_path, max_files=max_files)
     q = (
         stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(out_root, "checkpoint"))
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    if not batches:
+        return {"micro_batches": 0, "sink_counts": {}}
 
     # maintenance: each micro-batch landed one commit of small files;
     # bin-pack them before the read-back passes (OPTIMIZE — counts are
     # unaffected, pre-compaction snapshots stay time-travelable)
-    for stream_sink in ("otel_logs_stream", "topology_elements_stream"):
-        if sinks.exists(stream_sink):
-            sinks.compact(spark, stream_sink)
+    for name in ("otel_logs", "topology_elements"):
+        if sinks.exists(name):
+            sinks.compact(spark, name)
 
-    sink_counts = {"otel_logs": sinks.read(spark, "otel_logs_stream").count()}
-    # K4 resources dim MERGE off the landed log store — shared helper
-    # with the batch flagship (resource identity cannot drift)
-    from ..plans.pipeline import upsert_resources
-
-    sink_counts["otel_resources"] = upsert_resources(
-        spark, sinks, sinks.read(spark, "otel_logs_stream")
-    )
-    if sinks.exists("topology_elements_stream"):
-        el = sinks.read(spark, "topology_elements_stream")
+    sink_counts = {
+        name: sinks.read(spark, name).count() for name in ("otel_logs", "otel_resources")
+    }
+    if sinks.exists("topology_elements"):
+        el = sinks.read(spark, "topology_elements")
         distinct = el.select(
             "element_kind", "data_source", "shard_id", "external_id"
         ).distinct()
@@ -264,12 +218,7 @@ def run_pipeline_streaming(
         sink_counts["topology_components"] = kinds.get("component", 0)
         sink_counts["topology_relations"] = kinds.get("relation", 0)
         sink_counts["topology_deletes"] = kinds.get("delete", 0)
-        sink_counts.update(
-            publish_element_stream(
-                spark, sinks, collection_ts=f"stream-{len(batches)}",
-                elements_sink="topology_elements_stream",
-            )
-        )
+        sink_counts.update(publish_element_stream(spark, sinks, new_run_id()))
     return {"micro_batches": len(batches), "sink_counts": sink_counts}
 
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
 import uuid
 from contextlib import contextmanager
 from types import SimpleNamespace
@@ -65,3 +66,54 @@ def spark_jobs(spark):
             jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture(scope="session")
+def null_ident_mappings():
+    """The default mappings plus one whose required identifier evaluates
+    to null on every row, so every page records a mapping error."""
+    from sts_opentelemetry_collector_spark.config import ComponentMapping, ComponentOutput
+    from sts_opentelemetry_collector_spark.sources.settings import default_mappings
+
+    ms = default_mappings()
+    ms.components.append(
+        ComponentMapping(
+            identifier="null-ident-mapping",
+            output=ComponentOutput(
+                identifier="attrs['nope']", name="host", type_name="'t'"
+            ),
+        )
+    )
+    return ms
+
+
+@pytest.fixture
+def crash_once():
+    """`crash_once(owner, attr, when)` replaces `owner.attr` with a wrapper
+    that raises RuntimeError("injected crash") on the first call whose
+    arguments satisfy `when(*args, **kwargs)`, and puts the original back
+    as it raises; every other call passes through. Teardown puts it back
+    if the crash never fired."""
+    patches = []
+
+    def install(owner, attr, when):
+        mp = pytest.MonkeyPatch()
+        patches.append(mp)
+        orig = getattr(owner, attr)
+        armed = [True]
+        lock = threading.Lock()
+
+        def call(*args, **kwargs):
+            if armed and when(*args, **kwargs):
+                with lock:  # one crash, however many threads match
+                    fire = armed and armed.pop()
+                if fire:
+                    mp.undo()
+                    raise RuntimeError("injected crash")
+            return orig(*args, **kwargs)
+
+        mp.setattr(owner, attr, call)
+
+    yield install
+    for mp in patches:
+        mp.undo()

@@ -8,8 +8,10 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from sts_opentelemetry_collector_spark.plans.lineage import Manifest
 from sts_opentelemetry_collector_spark.plans.pipeline import run_pipeline
 from sts_opentelemetry_collector_spark.plans.sinks import SinkCatalog
+from sts_opentelemetry_collector_spark.plans.txlog import PendingCommit
 from sts_opentelemetry_collector_spark.sources.settings import default_mappings
 
 
@@ -192,7 +194,6 @@ def test_crashed_run_rollup_merge_healed(spark, webtext_dir, tmp_path):
     ).first()[0]
     assert doubled == 2 * good_mass
 
-    from sts_opentelemetry_collector_spark.plans.lineage import Manifest
     from sts_opentelemetry_collector_spark.plans.pipeline import (
         _heal_unmanifested_runs,
     )
@@ -297,27 +298,12 @@ def test_metadata_tombstones_on_removal(spark, webtext_dir, tmp_path):
     assert [r.data_source for r in ts] == [removed_id]
 
 
-def test_record_errors_counted_via_observe(spark, webtext_dir, tmp_path):
+def test_record_errors_counted_via_observe(spark, webtext_dir, tmp_path, null_ident_mappings):
     """A mapping whose required output evals null on some rows yields
     mapping_errors counts WITHOUT a separate branch-union re-execution
     (counts ride the element write via observe)."""
-    from sts_opentelemetry_collector_spark.config import (
-        ComponentMapping,
-        ComponentOutput,
-    )
-
     out = str(tmp_path / "errs")
-    ms = default_mappings()
-    # title is null for some parsed rows? use a condition-true mapping whose
-    # identifier is null whenever attrs lacks 'nope'
-    ms.components.append(
-        ComponentMapping(
-            identifier="null-ident-mapping",
-            output=ComponentOutput(
-                identifier="attrs['nope']", name="host", type_name="'t'"
-            ),
-        )
-    )
+    ms = null_ident_mappings
     summary = run_pipeline(spark, _webtext_path(webtext_dir), out, mappings=ms,
                            n_lineage_buckets=4)
     sinks = SinkCatalog(os.path.join(out, "sinks"))
@@ -341,7 +327,7 @@ def test_manifest_reads_spark_written_and_driver_written_files(spark, tmp_path):
     driver writes now, by the manifest itself and by Spark."""
     from pyspark.sql.types import DataType
 
-    from sts_opentelemetry_collector_spark.plans.lineage import MANIFEST_SCHEMA, Manifest
+    from sts_opentelemetry_collector_spark.plans.lineage import MANIFEST_SCHEMA
 
     path = str(tmp_path / "manifest.parquet")
     spark.createDataFrame(
@@ -370,8 +356,6 @@ def test_manifest_reads_spark_written_and_driver_written_files(spark, tmp_path):
 
 
 def test_manifest_launches_no_spark_jobs(spark, tmp_path, spark_jobs):
-    from sts_opentelemetry_collector_spark.plans.lineage import Manifest
-
     manifest = Manifest(str(tmp_path / "manifest.parquet"))
     with spark_jobs() as jobs:
         manifest.record(_manifest_rows("r1", [0, 1], "a"))
@@ -380,12 +364,30 @@ def test_manifest_launches_no_spark_jobs(spark, tmp_path, spark_jobs):
     assert jobs.n == 0
 
 
-def test_crash_during_element_write_converges(spark, webtext_dir, tmp_path, monkeypatch):
+# where a run can crash after commits have landed: (owner, attr, call match)
+CRASH_POINTS = {
+    "elements_append": (
+        SinkCatalog, "append",
+        lambda self, df, name, *a, **kw: name == "topology_elements",
+    ),
+    "logs_publish": (
+        PendingCommit, "publish",
+        lambda pending, *a, **kw: os.path.basename(pending.table.root) == "otel_logs",
+    ),
+    "manifest_record": (Manifest, "record", lambda *a, **kw: True),
+}
+
+
+@pytest.mark.parametrize("point", list(CRASH_POINTS))
+def test_crash_during_element_write_converges(
+    spark, webtext_dir, tmp_path, monkeypatch, crash_once, null_ident_mappings, point
+):
     """The resources MERGE, the rollup merge and the partition stats read
     only the staged logs and run beside the mapping chain. A crash in the
-    element write after both merges committed must converge on rerun to
-    an uninterrupted run, and run_pipeline must never return or raise
-    while one of those jobs is still running."""
+    element write, in the logs publish or in the manifest record, after
+    both merges committed, must converge on rerun to an uninterrupted
+    run, and run_pipeline must never return or raise while one of those
+    jobs is still running."""
     import threading
     import time
 
@@ -393,7 +395,8 @@ def test_crash_during_element_write_converges(spark, webtext_dir, tmp_path, monk
 
     wt = _webtext_path(webtext_dir)
     ref_out, out = str(tmp_path / "ref"), str(tmp_path / "crash")
-    run_pipeline(spark, wt, ref_out, n_lineage_buckets=4)
+    ms = null_ident_mappings
+    run_pipeline(spark, wt, ref_out, mappings=ms, n_lineage_buckets=4)
 
     lock = threading.Lock()
     running: list[str] = []
@@ -423,22 +426,18 @@ def test_crash_during_element_write_converges(spark, webtext_dir, tmp_path, monk
         return df
 
     monkeypatch.setattr(pipeline, "partition_stats", tracked_stats)
-    append = SinkCatalog.append
-    crash = [True]
 
-    def crashing_append(self, df, name, *args, **kwargs):
-        if name == "topology_elements" and crash[0]:
-            assert all(e.wait(60) for e in merged.values()), "tail merges never committed"
-            raise RuntimeError("injected crash")
-        return append(self, df, name, *args, **kwargs)
+    def tail_committed():
+        assert all(e.wait(60) for e in merged.values()), "tail merges never committed"
+        return True
 
-    monkeypatch.setattr(SinkCatalog, "append", crashing_append)
+    owner, attr, hit = CRASH_POINTS[point]
+    crash_once(owner, attr, lambda *a, **kw: hit(*a, **kw) and tail_committed())
 
     with pytest.raises(RuntimeError, match="injected crash"):
-        run_pipeline(spark, wt, out, n_lineage_buckets=4)
+        run_pipeline(spark, wt, out, mappings=ms, n_lineage_buckets=4)
     assert running == []
-    crash[0] = False
-    summary = run_pipeline(spark, wt, out, n_lineage_buckets=4)
+    summary = run_pipeline(spark, wt, out, mappings=ms, n_lineage_buckets=4)
     assert running == []
     assert summary["rows"] == 2000
 
@@ -452,8 +451,8 @@ def test_crash_during_element_write_converges(spark, webtext_dir, tmp_path, monk
         return sorted(str(r) for r in c.read(spark, name).collect())
 
     assert rollup(got) == rollup(ref)
-    assert rows(got, "otel_resources") == rows(ref, "otel_resources")
-    assert rows(got, "otel_logs") == rows(ref, "otel_logs")
+    for name in ("otel_resources", "otel_logs", "topology_elements", "mapping_errors"):
+        assert rows(got, name) == rows(ref, name), name
 
 
 def test_config_frames_are_arrow_local_relations(spark):

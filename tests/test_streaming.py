@@ -4,11 +4,18 @@ results as the batch operators (stream/batch unification check)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
+from sts_opentelemetry_collector_spark.plans.pipeline import run_pipeline
+from sts_opentelemetry_collector_spark.plans.sinks import SinkCatalog
+from sts_opentelemetry_collector_spark.plans.txlog import PendingCommit
+from sts_opentelemetry_collector_spark.sources.webtext import write_webtext
 from sts_opentelemetry_collector_spark.streaming.jobs import (
     read_webtext_stream,
+    run_pipeline_streaming,
     run_stream_to_sink,
     streaming_dedup,
     streaming_pair_join,
@@ -135,7 +142,7 @@ def test_streaming_pipeline_matches_batch(spark, webtext_dir, tmp_path):
 
     s_sinks = SinkCatalog(os.path.join(s_out, "sinks"))
     b_sinks = SinkCatalog(os.path.join(b_out, "sinks"))
-    assert s_sinks.read(spark, "otel_logs_stream").count() == 2100
+    assert s_sinks.read(spark, "otel_logs").count() == 2100
 
     def elem_set(df):
         return {
@@ -143,7 +150,7 @@ def test_streaming_pipeline_matches_batch(spark, webtext_dir, tmp_path):
             for r in df.select("element_kind", "data_source", "external_id").collect()
         }
 
-    got = elem_set(s_sinks.read(spark, "topology_elements_stream"))
+    got = elem_set(s_sinks.read(spark, "topology_elements"))
     expected = elem_set(b_sinks.read(spark, "topology_elements"))
     assert got == expected
 
@@ -159,7 +166,7 @@ def test_streaming_pipeline_matches_batch(spark, webtext_dir, tmp_path):
 
     # incremental rollup parity: per-micro-batch additive merges sum to
     # exactly the batch pipeline's rollup mass
-    s_mass = s_sinks.read(spark, "rollup_host_window_stream").agg(
+    s_mass = s_sinks.read(spark, "rollup_host_window").agg(
         F.sum("page_count")
     ).first()[0]
     b_mass = b_sinks.read(spark, "rollup_host_window").agg(
@@ -176,6 +183,112 @@ def test_streaming_pipeline_matches_batch(spark, webtext_dir, tmp_path):
     si = {tuple(r) for r in s_sinks.read(spark, "topology_intake").select(*intake_cols).collect()}
     bi = {tuple(r) for r in b_sinks.read(spark, "topology_intake").select(*intake_cols).collect()}
     assert si == bi
+
+
+def _arrive(src, gen_dir, name, pages, seed):
+    """Land one webtext file in the stream's source directory."""
+    f = write_webtext(gen_dir, pages, seed=seed)
+    os.makedirs(src, exist_ok=True)
+    shutil.move(f, os.path.join(src, name))
+
+
+@pytest.fixture(scope="module")
+def arrivals(tmp_path_factory):
+    """Three arrival files: three micro-batches at max_files=1."""
+    root = tmp_path_factory.mktemp("arrivals")
+    src = str(root / "src")
+    for i in range(3):
+        _arrive(src, str(root / f"gen{i}"), f"batch{i}.parquet", 700, 42 + i)
+    return src
+
+
+@pytest.fixture(scope="module")
+def error_stream(spark, arrivals, null_ident_mappings, tmp_path_factory):
+    """An uninterrupted stream over the arrivals whose mappings record an
+    error on every page: (summary, sinks)."""
+    out = str(tmp_path_factory.mktemp("error_stream"))
+    summary = run_pipeline_streaming(
+        spark, arrivals, out, mappings=null_ident_mappings, max_files=1
+    )
+    assert summary["micro_batches"] == 3
+    return summary, SinkCatalog(os.path.join(out, "sinks"))
+
+
+def _error_counts(sinks, spark):
+    return {
+        (r.data_source, r.signal, r.error): r.n
+        for r in sinks.read(spark, "mapping_errors")
+        .groupBy("data_source", "signal", "error")
+        .agg(F.sum("error_count").alias("n"))
+        .collect()
+    }
+
+
+def test_streaming_mapping_errors_match_batch(
+    spark, arrivals, error_stream, null_ident_mappings, tmp_path
+):
+    """Each micro-batch observes its record errors like a batch run, so
+    the stream's mapping_errors add up to the batch run's."""
+    b_out = str(tmp_path / "batch")
+    run_pipeline(spark, arrivals, b_out, mappings=null_ident_mappings, n_lineage_buckets=4)
+    got = _error_counts(error_stream[1], spark)
+    assert got == _error_counts(SinkCatalog(os.path.join(b_out, "sinks")), spark)
+    assert sum(got.values()) == 2100
+
+
+def test_redelivered_micro_batch_is_exactly_once(
+    spark, arrivals, error_stream, null_ident_mappings, crash_once, tmp_path
+):
+    """A crash inside micro-batch 2's logs publish, after its element,
+    error and rollup commits landed, fails the query; the restarted query
+    redelivers micro-batch 2, and the sinks end equal to an uninterrupted
+    stream's."""
+    ref_summary, ref = error_stream
+    out = str(tmp_path / "crashed")
+    crash_once(
+        PendingCommit, "publish",
+        lambda pending, *a, **kw: os.path.basename(pending.table.root) == "otel_logs"
+        and pending.meta.get("input_split", "").endswith("#2"),
+    )
+    with pytest.raises(Exception, match="injected crash"):
+        run_pipeline_streaming(spark, arrivals, out, mappings=null_ident_mappings, max_files=1)
+    summary = run_pipeline_streaming(
+        spark, arrivals, out, mappings=null_ident_mappings, max_files=1
+    )
+    assert summary["micro_batches"] == 1
+    assert summary["sink_counts"] == ref_summary["sink_counts"]
+
+    got = SinkCatalog(os.path.join(out, "sinks"))
+
+    def rows(c, name):
+        return sorted(str(r) for r in c.read(spark, name).collect())
+
+    for name in (
+        "otel_logs", "rollup_host_window", "topology_elements", "otel_resources",
+        "mapping_errors",
+    ):
+        assert rows(got, name) == rows(ref, name), name
+
+
+def test_stream_drain_without_micro_batches_publishes_nothing(spark, tmp_path):
+    """A drain that finds no new file runs no micro-batch and publishes
+    nothing; every drain that does publish gets its own collection id."""
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    sinks = SinkCatalog(os.path.join(out, "sinks"))
+    _arrive(src, str(tmp_path / "gen0"), "a.parquet", 300, 7)
+    first = run_pipeline_streaming(spark, src, out, max_files=1)
+    assert first["micro_batches"] == 1
+    n_envelopes = sinks.read(spark, "topology_envelopes").count()
+    assert n_envelopes == first["sink_counts"]["topology_envelopes"] > 0
+
+    idle = run_pipeline_streaming(spark, src, out, max_files=1)
+    assert idle["micro_batches"] == 0
+    assert sinks.read(spark, "topology_envelopes").count() == n_envelopes
+
+    _arrive(src, str(tmp_path / "gen1"), "b.parquet", 300, 8)
+    assert run_pipeline_streaming(spark, src, out, max_files=1)["micro_batches"] == 1
+    ids = sinks.read(spark, "topology_envelopes").select("collection_ts").distinct()
+    assert ids.count() == 2
 
 
 def test_settings_stream_applies_diffs_and_tombstones(spark, tmp_path):
