@@ -2108,11 +2108,8 @@ def q_k6_intake_groups(spark, sf):
     (exporter.go:44-54, topology.go:335-355); the order digest pins the
     canonical ordering cross-engine."""
     from .operators.intake import intake_payloads
-    from .operators.textops import spread
 
-    # spread: both intake legs dedup/group page-scale projections that
-    # would otherwise partial-aggregate inside the one-task scan
-    e = spread(_t(spark, sf, "events").select("user_id", "event_type"))
+    e = _t(spark, sf, "events").select("user_id", "event_type")
     api_key = F.concat(F.lit("key-"), (F.col("user_id") % 4).cast("string"))
     comps = (
         e.where(F.col("event_type") == "signup")

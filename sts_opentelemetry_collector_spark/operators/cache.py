@@ -43,10 +43,6 @@ def release_caches(registry: list | None = None, blocking: bool = False) -> int:
     return n
 
 
-def session_cache_count() -> int:
-    return len(_SESSION_CACHES)
-
-
 class CheckpointHandle:
     """Deferred block release for a localCheckpoint-backed frame.
 

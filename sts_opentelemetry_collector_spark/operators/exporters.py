@@ -71,22 +71,6 @@ def dispatch_metrics(metrics: DataFrame, type_col: str = "metric_type") -> dict[
     return {t: base.where(F.col(type_col) == t).drop(type_col) for t in METRIC_TYPES}
 
 
-def logs_table(pages: DataFrame) -> DataFrame:
-    """K2: the otel_logs sink shape (exporter_logs.go:130-160): severity
-    derived from parse success, body = extracted text, date partition."""
-    severity = F.when(
-        F.col("extracted_text").isNull() | (F.col("extracted_text") == ""), "ERROR"
-    ).otherwise("INFO")
-    return pages.select(
-        F.col("warc_ts").alias("timestamp"),
-        F.col("url").alias("trace_source"),
-        severity.alias("severity_text"),
-        F.col("extracted_text").alias("body"),
-        F.col("host").alias("service_name"),
-        F.to_date("warc_ts").alias("ds"),
-    )
-
-
 # K3 complete traces sink shape (exporter_traces.go:104-178; DDL :214-249):
 # events and links land as ClickHouse-Nested parallel arrays
 # (Events.Timestamp/Name, Links.TraceId/SpanId/TraceState) and every span

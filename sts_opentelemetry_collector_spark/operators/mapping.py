@@ -176,35 +176,6 @@ def _mapping_exprs(m) -> list[str]:
 # ---------------------------------------------------------------------------
 # Output schemas (fixed envelope — spec/topo_stream.proto:9-47, :56-80)
 
-COMPONENT_COLS = [
-    "external_id",
-    "identifiers",
-    "name",
-    "type_name",
-    "layer",
-    "domain",
-    "tags",
-    "configuration",
-    "status",
-    "data_source",
-    "signal",
-]
-
-RELATION_COLS = [
-    "external_id",
-    "source_identifier",
-    "target_identifier",
-    "type_name",
-    "dependency_type",
-    "data_source",
-    "signal",
-]
-
-DELETE_COLS = ["external_id", "data_source", "signal"]
-
-ERROR_COLS = ["data_source", "signal", "error"]
-
-
 @dataclass
 class CompiledMappings:
     """Result of compiling a MappingSet against an input DataFrame."""
@@ -212,7 +183,6 @@ class CompiledMappings:
     components: DataFrame | None = None
     relations: DataFrame | None = None
     deletes: DataFrame | None = None
-    record_errors: DataFrame | None = None
     errors: list[dict] = field(default_factory=list)  # mapping-level (plan-time) errors
     # data_source -> input columns its expressions reference (for dedup keys)
     refs: dict[str, list[str]] = field(default_factory=dict)
@@ -239,7 +209,6 @@ def _empty(spark: SparkSession, kind: str) -> DataFrame:
             "type_name string, dependency_type string, data_source string, signal string"
         ),
         "deletes": "external_id string, data_source string, signal string",
-        "record_errors": "data_source string, signal string, error string",
     }
     return spark.createDataFrame([], schemas[kind])
 
@@ -358,10 +327,10 @@ def _analyze(df: DataFrame, m, exprs_and_kinds: list[tuple[str, str]]) -> str | 
 
 def compile_component_mapping(
     df: DataFrame, m: ComponentMapping
-) -> tuple[DataFrame | None, DataFrame | None, str | None, DataFrame | None]:
+) -> tuple[DataFrame | None, str | None, DataFrame | None]:
     """Compile one component mapping.
 
-    Returns (components, record_errors, mapping_error, flagged):
+    Returns (components, mapping_error, flagged):
     `flagged` is the pre-split projection with a `_required_ok` column so
     callers can observe() error counts on the same job as the element
     write (None for delete-action or plan-time-invalid mappings).
@@ -377,7 +346,7 @@ def compile_component_mapping(
     ]
     err = _validate(df, m, checks)
     if err is not None:
-        return None, None, err, None
+        return None, err, None
 
     branch = _branch(df, m)
 
@@ -387,7 +356,7 @@ def compile_component_mapping(
             F.lit(m.identifier).alias("data_source"),
             F.lit(m.signal).alias("signal"),
         ).where(F.col("external_id").isNotNull())
-        return deletes, None, None, None
+        return deletes, None, None
 
     ident = F.expr(rewrite_vars(o.identifier)).cast("string")
     addl = [F.expr(rewrite_vars(a)).cast("string") for a in o.additional_identifiers]
@@ -421,7 +390,8 @@ def compile_component_mapping(
         F.lit(m.identifier).alias("data_source"),
         F.lit(m.signal).alias("signal"),
     )
-    # Required fields: identifier/name/typeName null => record-level error row
+    # Required fields: identifier/name/typeName null => record error (the
+    # caller counts these rows via observe() on the element write)
     required_ok = (
         F.col("external_id").isNotNull()
         & F.col("name").isNotNull()
@@ -432,17 +402,12 @@ def compile_component_mapping(
     # re-executing the whole branch union to count (usually zero) errors
     flagged = projected.withColumn("_required_ok", required_ok)
     comps = flagged.where(F.col("_required_ok")).drop("_required_ok")
-    rec_errors = flagged.where(~F.col("_required_ok")).select(
-        F.col("data_source"),
-        F.col("signal"),
-        F.lit("required output expression evaluated to null").alias("error"),
-    )
-    return comps, rec_errors, None, flagged
+    return comps, None, flagged
 
 
 def compile_relation_mapping(
     df: DataFrame, m: RelationMapping
-) -> tuple[DataFrame | None, DataFrame | None, str | None, DataFrame | None]:
+) -> tuple[DataFrame | None, str | None, DataFrame | None]:
     o = m.output
     checks = [
         (m.condition or "", "bool"),
@@ -452,7 +417,7 @@ def compile_relation_mapping(
     ]
     err = _validate(df, m, checks)
     if err is not None:
-        return None, None, err, None
+        return None, err, None
 
     branch = _branch(df, m)
     src = F.expr(rewrite_vars(o.source_id)).cast("string")
@@ -464,7 +429,7 @@ def compile_relation_mapping(
             F.lit(m.identifier).alias("data_source"),
             F.lit(m.signal).alias("signal"),
         ).where(src.isNotNull() & tgt.isNotNull())
-        return deletes, None, None, None
+        return deletes, None, None
 
     # dependencyType normalization (mapping.go:280-292)
     dep = F.upper(F.trim(F.lit(o.dependency_type)))
@@ -489,12 +454,7 @@ def compile_relation_mapping(
     )
     flagged = projected.withColumn("_required_ok", required_ok)
     rels = flagged.where(F.col("_required_ok")).drop("_required_ok")
-    rec_errors = flagged.where(~F.col("_required_ok")).select(
-        F.col("data_source"),
-        F.col("signal"),
-        F.lit("required output expression evaluated to null").alias("error"),
-    )
-    return rels, rec_errors, None, flagged
+    return rels, None, flagged
 
 
 def _union_all(dfs: list[DataFrame]) -> DataFrame | None:
@@ -529,12 +489,12 @@ def apply_mappings(
             relations=[_fold_mapping(m, cols) for m in ms.relations],
         )
     result = CompiledMappings()
-    comp_parts, rel_parts, del_parts, err_parts = [], [], [], []
+    comp_parts, rel_parts, del_parts = [], [], []
     comp_flag_parts, rel_flag_parts = [], []
     result.create_ids = {"components": [], "relations": []}
 
     for m in ms.components:
-        out, rec_err, map_err, flagged = compile_component_mapping(df, m)
+        out, map_err, flagged = compile_component_mapping(df, m)
         if map_err is not None:
             result.errors.append(
                 {"data_source": m.identifier, "signal": signal, "error": map_err}
@@ -555,12 +515,11 @@ def apply_mappings(
                 del_parts.append(out)
         else:
             comp_parts.append(out)
-            err_parts.append(rec_err)
             comp_flag_parts.append(flagged)
             result.create_ids["components"].append(m.identifier)
 
     for m in ms.relations:
-        out, rec_err, map_err, flagged = compile_relation_mapping(df, m)
+        out, map_err, flagged = compile_relation_mapping(df, m)
         if map_err is not None:
             result.errors.append(
                 {"data_source": m.identifier, "signal": signal, "error": map_err}
@@ -572,7 +531,6 @@ def apply_mappings(
                 del_parts.append(out)
         else:
             rel_parts.append(out)
-            err_parts.append(rec_err)
             rel_flag_parts.append(flagged)
             result.create_ids["relations"].append(m.identifier)
 
@@ -581,8 +539,4 @@ def apply_mappings(
     result.components_flagged = _union_all(comp_flag_parts)
     result.relations_flagged = _union_all(rel_flag_parts)
     result.deletes = _union_all(del_parts) or _empty(spark, "deletes")
-    rec_errors = _union_all(err_parts)
-    result.record_errors = (
-        rec_errors if rec_errors is not None else _empty(spark, "record_errors")
-    )
     return result

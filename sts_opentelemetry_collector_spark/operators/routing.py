@@ -2,9 +2,10 @@
 
 - R1 stable shard id: FNV-1a-32(external_id) % 4 (message_builder.go:13-19,
   :259-263) — byte-parity via the vectorized pandas UDF in functions.hashes.
-- R2 keyed stream: repartition by (data_source, shard_id) so every
-  (dataSource, shard) lands in one output partition, preserving the Kafka
-  partition-ordering contract (spec/topo_stream.proto:154-162).
+- R2 keyed stream: the topology_elements write partitions by
+  (data_source, shard_id) (plans/pipeline.py), so every (dataSource, shard)
+  lands in its own output directory — the Kafka partition-ordering
+  contract's analog (spec/topo_stream.proto:154-162).
 - R3 pipeline fan-out: N filtered writes from ONE persisted DataFrame —
   the collector's service.pipelines routing one connector output to
   multiple exporters.
@@ -46,17 +47,6 @@ def with_shard_id(
         "shard_id",
         F.when(F.col(id_col).isNotNull(), F.pmod(h, F.lit(shards))).otherwise(F.lit(-1)),
     )
-
-
-def keyed_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """R2: co-locate each (data_source, shard_id) stream. At 100 TB this is
-    the one intentional shuffle before the sink write; AQE coalesces small
-    streams, and shard_id spreads the Zipf-skewed big data sources over 4
-    partitions exactly like the reference's Kafka sharding."""
-    cols = [F.col("data_source"), F.col("shard_id")]
-    if num_partitions:
-        return df.repartition(num_partitions, *cols)
-    return df.repartition(*cols)
 
 
 def route_fanout(

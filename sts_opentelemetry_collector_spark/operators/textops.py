@@ -445,15 +445,9 @@ def connected_components(
     is pytest-pinned, including a long-path graph where propagation's
     round count is O(n).
 
-    algorithm="auto": run propagation with a small round budget
-    (near-dup graphs are near-cliques, diameter 2-4) and FALL BACK to
-    star when the budget is exhausted — adaptive-strategy selection, so
-    an unexpectedly chained graph degrades to the provably-bounded
-    algorithm instead of raising.
-
-    Explicit propagation/star raise RuntimeError if max_iters rounds
-    pass without a fixpoint — a silently-partial labeling would emit
-    wrong group_rep values downstream (ADVICE r3).
+    Both algorithms raise RuntimeError if max_iters rounds pass without
+    a fixpoint — a silently-partial labeling would emit wrong group_rep
+    values downstream (ADVICE r3).
 
     Checkpoint hygiene: each round's localCheckpoint blocks are freed as
     soon as the next round's checkpoint supersedes them (they are dead —
@@ -477,20 +471,8 @@ def connected_components(
         return _cc_two_phase_star(
             edges, max_iters=max_iters, cache_registry=cache_registry
         )
-    if algorithm == "auto":
-        # propagation budget: 6 rounds covers diameter-<=6 components —
-        # generous for near-dup near-cliques; a chained graph exhausts
-        # it and falls back to the O(log² n)-round algorithm
-        try:
-            return _cc_propagation(
-                edges, max_iters=min(6, max_iters), cache_registry=cache_registry
-            )
-        except RuntimeError:
-            return _cc_two_phase_star(
-                edges, max_iters=max_iters, cache_registry=cache_registry
-            )
     if algorithm != "propagation":
-        raise ValueError("algorithm in ('propagation', 'star', 'auto')")
+        raise ValueError("algorithm in ('propagation', 'star')")
     return _cc_propagation(edges, max_iters=max_iters, cache_registry=cache_registry)
 
 
@@ -555,7 +537,7 @@ def _cc_propagation(
         raise RuntimeError(
             f"connected_components(propagation) did not converge in {max_iters} "
             "rounds (component diameter exceeds max_iters) — partial labels "
-            "would be WRONG; raise max_iters or use algorithm='star'/'auto'"
+            "would be WRONG; raise max_iters or use algorithm='star'"
         )
     # the final round's blocks back the returned frame: deferred release
     # (register the handle of the CHECKPOINTED frame itself — labels is a
@@ -666,11 +648,14 @@ def _cc_two_phase_star(
 
 
 def spread(docs: DataFrame) -> DataFrame:
-    """Compute-dense ops over small/compacted inputs need an explicit
-    fan-out: a 5k-row single-file table scans as ONE task, serializing the
-    hashing regardless of cluster size. At 100 TB inputs arrive pre-split;
-    for small dimension-scale tables this round-robin repartition is the
-    standard fix."""
+    """Round-robin exchange to defaultParallelism partitions, ahead of a
+    compute-dense op: a single-file table scans as ONE task, serializing
+    the hashing regardless of cluster size.
+
+    The exchange is UNCONDITIONAL: every call shuffles the full input,
+    even when it already arrives in defaultParallelism or more
+    partitions, where the shuffle buys no fan-out. Every call site
+    reads a single-file table, so no partition-count gate is kept."""
     return docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
 
 

@@ -8,7 +8,6 @@ import pyspark.sql.functions as F
 from sts_opentelemetry_collector_spark.operators.exporters import (
     METRIC_TYPES,
     dispatch_metrics,
-    logs_table,
     resources_table,
     with_span_parent_type,
 )
@@ -66,15 +65,6 @@ def test_metric_dispatch_and_value_coalesce(spark):
     assert tables["sum"].first().value == 2.5
     total = sum(t.count() for t in tables.values())
     assert total == 6
-
-
-def test_logs_table_severity(spark, webtext):
-    from sts_opentelemetry_collector_spark.operators.parse import parse_pages
-
-    logs = logs_table(parse_pages(webtext))
-    assert logs.where("severity_text = 'ERROR'").count() == 0  # all parse
-    row = logs.first()
-    assert row.body is not None and row.ds is not None
 
 
 def test_service_graph_over_generated_spans(spark):

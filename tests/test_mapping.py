@@ -29,7 +29,10 @@ from sts_opentelemetry_collector_spark.sources.settings import (
 @pytest.fixture(scope="module")
 def pages(spark, webtext):
     register_sql_functions(spark)
-    return with_attrs(parse_pages(webtext)).cache()
+    df = with_attrs(parse_pages(webtext)).cache()
+    yield df
+    # later modules (test_oracle) assert no cached RDD survives a query
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

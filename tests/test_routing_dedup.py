@@ -18,7 +18,6 @@ from sts_opentelemetry_collector_spark.operators.dedup import (
 )
 from sts_opentelemetry_collector_spark.operators.routing import (
     SHARD_COUNT,
-    keyed_repartition,
     new_streams,
     removal_tombstones,
     route_fanout,
@@ -141,21 +140,6 @@ def test_resource_ref_content_addressed(spark):
     )
     out = resource_ref(df)
     assert out.select("resource_ref").distinct().count() == 2
-
-
-def test_keyed_repartition_colocates(spark):
-    df = spark.createDataFrame(
-        [("m1", 0, i) for i in range(50)] + [("m2", 1, i) for i in range(50)],
-        "data_source string, shard_id int, v long",
-    )
-    parts = (
-        keyed_repartition(df, 8)
-        .withColumn("pid", F.spark_partition_id())
-        .groupBy("data_source", "shard_id")
-        .agg(F.countDistinct("pid").alias("npid"))
-        .collect()
-    )
-    assert all(r.npid == 1 for r in parts)
 
 
 def test_near_dup_plans_have_no_cartesian(spark):
@@ -474,28 +458,6 @@ def test_connected_components_star_long_path(spark):
     assert star == {v: 1 for v in range(1, 61)}
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, algorithm="propagation", max_iters=10).collect()
-
-
-def test_connected_components_auto_fallback(spark):
-    """algorithm='auto': a shallow near-clique graph converges inside the
-    propagation budget; a 60-vertex path exhausts it and silently falls
-    back to star — correct labels either way, never a raise."""
-    from sts_opentelemetry_collector_spark.operators.textops import (
-        connected_components,
-    )
-
-    clique = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    got = {r.doc_id: r.group_rep
-           for r in connected_components(clique, algorithm="auto").collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-    path = [(i + 1, i) for i in range(1, 60)]
-    pairs = spark.createDataFrame(path, "doc_a long, doc_b long")
-    got = {r.doc_id: r.group_rep
-           for r in connected_components(pairs, algorithm="auto").collect()}
-    assert got == {v: 1 for v in range(1, 61)}
 
 
 def test_top_token_count_single_pass_equals_naive(spark):
