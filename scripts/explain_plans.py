@@ -23,7 +23,7 @@ HEADLINERS = [
     ("tpch_q1", "scan-side filter pushdown + two-phase hash aggregate in one codegen stage"),
     ("j2_broadcast_enrich", "dimension joins chosen as BroadcastHashJoin — fact side never shuffles"),
     ("dedup_minhash_lsh", "row-local HOF signatures (no shuffle until the single bucket groupBy)"),
-    ("w1_tumbling_rollup", "salted two-level window aggregate: partial on (keys, win, salt), merge on (keys, win)"),
+    ("w1_tumbling_rollup", "one groupBy on (hour, event_type): map-side partial hash aggregate, one shuffle, final merge"),
     ("k5_exp_histogram", "two shuffles total: (dims, sign, idx) partial agg then dims assembly, all JVM-side"),
     ("ann_ivf_topk", "centroid broadcast + single-bucket scan — no all-pairs join anywhere"),
     ("dedup_apply", "left-anti join with NO broadcast hint (AQE size-gates at runtime)"),

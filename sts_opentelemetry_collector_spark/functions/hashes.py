@@ -3,64 +3,23 @@
 FNV-1a-32 drives shard assignment (internal/message_builder.go:259-263:
 ``shardId = FNV-1a-32(external_id) % ShardCount``). Spark's builtin
 hash()/xxhash64 are different families, so parity requires implementing
-FNV-1a — done as an Arrow-batched pandas UDF (SURVEY.md §2.9: one of the
-only two places Python is allowed). Vectorized across the batch via a
-numpy byte-matrix sweep: O(max_len) numpy passes instead of per-row Python.
+FNV-1a — done as a JVM higher-order-function fold over the utf-8 bytes
+(whole-stage codegen, no Python workers), parity-tested against the
+scalar reference ``fnv1a32_py``.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql.types import LongType
-
-FNV_OFFSET_32 = np.uint32(2166136261)
-FNV_PRIME_32 = np.uint32(16777619)
-
-
-def fnv1a32_batch(values: pd.Series) -> pd.Series:
-    """Vectorized FNV-1a-32 over a batch of strings (utf-8 bytes).
-
-    Builds a (n, max_len) byte matrix and folds column-by-column with a
-    validity mask — numpy-vectorized across rows, matching Go's
-    hash/fnv New32a() byte-for-byte.
-    """
-    raw = [v.encode("utf-8") if isinstance(v, str) else (v or b"") for v in values]
-    n = len(raw)
-    if n == 0:
-        return pd.Series([], dtype="int64")
-    lens = np.fromiter((len(b) for b in raw), dtype=np.int64, count=n)
-    max_len = int(lens.max()) if n else 0
-    h = np.full(n, FNV_OFFSET_32, dtype=np.uint32)
-    if max_len:
-        mat = np.zeros((n, max_len), dtype=np.uint8)
-        for i, b in enumerate(raw):
-            if b:
-                mat[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-        idx = np.arange(max_len)
-        with np.errstate(over="ignore"):
-            for j in range(max_len):
-                active = lens > idx[j]
-                hj = h[active]
-                hj ^= mat[active, j].astype(np.uint32)
-                hj *= FNV_PRIME_32
-                h[active] = hj
-    return pd.Series(h.astype(np.int64))
-
-
-@F.pandas_udf(LongType())
-def fnv1a32(values: pd.Series) -> pd.Series:
-    return fnv1a32_batch(values)
 
 
 def fnv1a32_col(col) -> "F.Column":
     """Pure-JVM FNV-1a-32: fold over the utf-8 bytes with HOFs.
 
-    Same byte-for-byte semantics as the pandas UDF (parity-tested), but
-    stays inside whole-stage codegen — no Python workers in the shard
-    stage. (h ^ byte) * prime stays < 2^56, so plain long arithmetic with
-    a 32-bit mask after the multiply is exact.
+    Byte-for-byte Go hash/fnv New32a() (parity-tested against
+    fnv1a32_py), inside whole-stage codegen — no Python workers in the
+    shard stage. (h ^ byte) * prime stays < 2^56, so plain long arithmetic
+    with a 32-bit mask after the multiply is exact.
     """
     b = F.encode(col, "utf-8")
     folded = F.aggregate(

@@ -329,35 +329,18 @@ def windowed_rollup(
     ts_col: str = "warc_ts",
     keys: list[str] | None = None,
     window: str = "1 hour",
-    salt_skew: bool = False,
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """Tumbling-window telemetry rollup keyed (host, warc_ts bucket) — the
     north rule's windowed rollup (≙ service-graph periodic flush A4 +
-    internal telemetry). Hosts are Zipf-skewed, so optionally salt: partial
-    aggregate on (keys, window, salt) then re-aggregate — a two-level
-    combine that bounds any single reducer's key volume at 100 TB.
+    internal telemetry). Hosts are Zipf-skewed, but `count` is partially
+    aggregated on each map task, so a hot host sends at most one row per
+    (host, window) per task into the single shuffle — no salting needed.
     """
     keys = keys or ["host"]
     win = F.window(F.col(ts_col), window)
-    if not salt_skew:
-        return (
-            df.groupBy(*keys, win.alias("win"))
-            .agg(F.count(F.lit(1)).alias("page_count"))
-            .select(
-                *keys,
-                F.col("win.start").alias("window_start"),
-                F.col("win.end").alias("window_end"),
-                "page_count",
-            )
-        )
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets)))
-    partial = salted.groupBy(*keys, win.alias("win"), F.col("_salt")).agg(
-        F.count(F.lit(1)).alias("_partial")
-    )
     return (
-        partial.groupBy(*keys, "win")
-        .agg(F.sum("_partial").alias("page_count"))
+        df.groupBy(*keys, win.alias("win"))
+        .agg(F.count(F.lit(1)).alias("page_count"))
         .select(
             *keys,
             F.col("win.start").alias("window_start"),
@@ -422,16 +405,6 @@ def coalesce_envelopes(
             F.count(F.lit(1)).alias("element_count"),
         )
     )
-
-
-def usage_bytes(df: DataFrame, cols: list[str], group_by: list[str] | None = None) -> DataFrame:
-    """A10/P15: serialized-byte usage counter (stsusage_processor.go:22-38)."""
-    total = None
-    for c in cols:
-        b = F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0))
-        total = b if total is None else total + b
-    g = df.groupBy(*group_by) if group_by else df.groupBy()
-    return g.agg(F.sum(total).alias("usage_bytes"), F.count(F.lit(1)).alias("record_count"))
 
 
 def telemetry_counters(

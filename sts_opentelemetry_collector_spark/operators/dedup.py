@@ -1,63 +1,34 @@
-"""Projection-hash deduplication (the reference's signature stateful op).
+"""Deduplication (the reference's signature stateful op, D1-D5).
 
 Reference semantics (connector/topologyconnector/internal/deduplicator.go):
-- D1 key = xxhash64 over (mapping identifier, signal, and ONLY the input
-  fields the mapping's expressions reference), canonically encoded
-  (deduplicator.go:151-205, :220-270, :332-392).
-- D2 the referenced-field set comes from walking the expression ASTs
-  (expression_ref_manager.go) — here it is computed at compile time
-  (mapping.referenced_columns) and threaded through CompiledMappings.refs.
+- D1/D2 the reference keys its dedup on xxhash64 over (mapping identifier,
+  signal, and ONLY the input fields the mapping's expressions reference,
+  found by walking the expression ASTs — deduplicator.go:151-205,
+  expression_ref_manager.go). The pipeline dedups the emitted elements by
+  identity instead (`dedup_elements`), so a re-sent input still yields no
+  new element (documented deviation, COVERAGE.md D1/D2).
 - D3 TTL refresh: a seen key is re-sent once `now - lastSent >=
   ttl * refresh_fraction` so downstream elements don't expire
   (deduplicator.go:102-150; defaults factory.go:98-105, refresh 0.5).
 
 Spark redefinition (documented deviation, SURVEY.md §7.3.3): the reference
-is wall-clock stateful; a batch job gets DETERMINISTIC dedup by bucketing
-event time into refresh windows and keeping the first record per
-(projection-hash, window) via a `min_by` aggregate (partial-mergeable:
-map-side combine reduces each task to one candidate row per live group
-before the single hash-partitioned shuffle — no per-group sort, no
-driver state, AQE-coalesced; the r5-era row_number window sorted every
-group's full row set).
+is wall-clock stateful; a batch job gets DETERMINISTIC D3 dedup by
+bucketing event time into refresh windows and keeping the first record per
+(key, window) via a `min_by` aggregate (partial-mergeable: map-side
+combine reduces each task to one candidate row per live group before the
+single hash-partitioned shuffle — no per-group sort, no driver state,
+AQE-coalesced; the r5-era row_number window sorted every group's full row
+set).
 
-A second entry point dedups the OUTPUT stream by element identity
+`dedup_elements` dedups the OUTPUT stream by element identity
 (external_id) — what the e2e dedup-suppression test observes
-(logtopology_test.go:35-62): identical re-sends within a refresh window
-yield zero new elements.
+(logtopology_test.go:35-62): identical re-sends yield zero new elements.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-
-def projection_hash(
-    df: DataFrame,
-    data_source: str,
-    signal: str,
-    ref_cols: list[str],
-    out_col: str = "dedup_key",
-) -> DataFrame:
-    """D1: 64-bit projection hash over referenced columns only.
-
-    Canonical encoding: map columns are serialized with sorted keys via
-    to_json(sorted entries) so attribute insertion order never changes the
-    key (deduplicator_test.go:17-245 order-invariance); xxhash64 matches the
-    reference's hash family (deduplicator.go:13).
-    """
-    parts = [F.lit(data_source), F.lit(signal)]
-    for c in sorted(ref_cols):
-        dt = df.schema[c].dataType.typeName()
-        col = F.col(c)
-        if dt == "map":
-            entries = F.array_sort(F.map_entries(col))
-            parts.append(F.to_json(entries))
-        elif dt in ("array", "struct"):
-            parts.append(F.to_json(col))
-        else:
-            parts.append(col.cast("string"))
-    return df.withColumn(out_col, F.xxhash64(*parts))
 
 
 def dedup_within_refresh_window(
@@ -96,24 +67,12 @@ def dedup_within_refresh_window(
     )
 
 
-def dedup_elements(
-    elements: DataFrame,
-    ts_col: str | None = None,
-    ttl_seconds: int = 900,
-    refresh_fraction: float = 0.5,
-) -> DataFrame:
-    """Dedup emitted topology elements by (data_source, signal, external_id).
-
-    Without a timestamp column (pure batch), this is plain first-wins
-    dropDuplicates — re-running on identical input yields an identical
-    (not doubled) element set, the e2e dedup-suppression invariant.
-    """
-    keys = ["data_source", "signal", "external_id"]
-    if ts_col is None:
-        return elements.dropDuplicates(keys)
-    return dedup_within_refresh_window(
-        elements, keys, ts_col=ts_col, ttl_seconds=ttl_seconds, refresh_fraction=refresh_fraction
-    )
+def dedup_elements(elements: DataFrame) -> DataFrame:
+    """Dedup emitted topology elements by (data_source, signal, external_id):
+    plain first-wins dropDuplicates — re-running on identical input yields
+    an identical (not doubled) element set, the e2e dedup-suppression
+    invariant."""
+    return elements.dropDuplicates(["data_source", "signal", "external_id"])
 
 
 def resource_ref(df: DataFrame, attrs_col: str = "attrs") -> DataFrame:

@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import MapType, StringType
 
 from ..config import (
-    ACTION_CREATE,
     ACTION_DELETE,
     ComponentMapping,
     MappingSet,
@@ -76,8 +75,6 @@ def rewrite_vars(expr: str) -> str:
     """``vars.name`` -> ``var_name`` (the materialized variable column)."""
     return _VARS_REF.sub(r"var_\1", expr)
 
-
-_IDENT = re.compile(r"\b[A-Za-z_][A-Za-z0-9_]*\b")
 
 _ATTR_LOOKUP = re.compile(
     r"(?<![A-Za-z0-9_])attrs\[(?P<q>['\"])(?P<k>[A-Za-z0-9_.\- ]+)(?P=q)\]"
@@ -143,36 +140,6 @@ def _fold_mapping(m, attr_cols: list[str]):
     )
 
 
-def referenced_columns(exprs: list[str], columns: list[str]) -> list[str]:
-    """Plan-time analog of the reference's expression-AST reference walk
-    (expression_ref_manager.go:299-359): which INPUT columns do this
-    mapping's expressions read? Drives the projection-hash dedup key (D1/D2)
-    so the dedup key cost is proportional to referenced columns only.
-    """
-    colset = set(columns)
-    seen: set[str] = set()
-    for e in exprs:
-        for tok in _IDENT.findall(rewrite_vars(e)):
-            if tok in colset:
-                seen.add(tok)
-    return sorted(seen)
-
-
-def _mapping_exprs(m) -> list[str]:
-    """All expression strings of a mapping (for reference extraction)."""
-    out = [m.condition or ""] + [e for _, e in m.vars]
-    o = m.output
-    if isinstance(m, ComponentMapping):
-        out += [o.identifier, o.name, o.type_name, *o.additional_identifiers]
-        out += [o.configuration or "", o.status or "", o.layer or "", o.domain or ""]
-        for t in o.tags:
-            out.append(t.source)
-    else:
-        out += [o.source_id, o.target_id, o.type_name]
-    # vars expressions themselves may be referenced transitively; include raw
-    return [e for e in out if e]
-
-
 # ---------------------------------------------------------------------------
 # Output schemas (fixed envelope — spec/topo_stream.proto:9-47, :56-80)
 
@@ -184,8 +151,6 @@ class CompiledMappings:
     relations: DataFrame | None = None
     deletes: DataFrame | None = None
     errors: list[dict] = field(default_factory=list)  # mapping-level (plan-time) errors
-    # data_source -> input columns its expressions reference (for dedup keys)
-    refs: dict[str, list[str]] = field(default_factory=dict)
     # pre-required-filter unions with a _required_ok flag: lets the caller
     # observe() error counts on the element-write job itself instead of
     # re-running the branch unions (a full input re-scan) to count errors
@@ -500,7 +465,6 @@ def apply_mappings(
                 {"data_source": m.identifier, "signal": signal, "error": map_err}
             )
             continue
-        result.refs[m.identifier] = referenced_columns(_mapping_exprs(m), df.columns)
         if m.action == ACTION_DELETE:
             # DELETE is only valid for the LOGS signal at the TERMINAL
             # visit (mapping_handler.go:72-73, :93-96 HandleTerminalVisit)
@@ -525,7 +489,6 @@ def apply_mappings(
                 {"data_source": m.identifier, "signal": signal, "error": map_err}
             )
             continue
-        result.refs[m.identifier] = referenced_columns(_mapping_exprs(m), df.columns)
         if m.action == ACTION_DELETE:
             if signal == "logs":  # see component branch: LOGS-only DELETE
                 del_parts.append(out)

@@ -40,9 +40,7 @@ def _parse_html_udf(html: pd.Series) -> pd.DataFrame:
     return parse_html_batch(html)
 
 
-def parse_pages(
-    webtext: DataFrame, keep_html: bool = False, keep_extra: list[str] | None = None
-) -> DataFrame:
+def parse_pages(webtext: DataFrame, keep_extra: list[str] | None = None) -> DataFrame:
     """webtext -> page records with extracted_text + attribute columns.
 
     host/path are extracted JVM-side (regexp_extract, whole-stage codegen);
@@ -66,8 +64,6 @@ def parse_pages(
     ]
     if "text" in webtext.columns:
         cols.append(F.col("text").alias("expected_text"))
-    if keep_html:
-        cols.append(F.col("html"))
     for c in keep_extra or []:
         cols.append(F.col(c))
     return df.select(*cols)

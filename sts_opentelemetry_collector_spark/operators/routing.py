@@ -1,7 +1,7 @@
 """Routing / sharding / fan-out (SURVEY.md §2.6 R1-R6).
 
 - R1 stable shard id: FNV-1a-32(external_id) % 4 (message_builder.go:13-19,
-  :259-263) — byte-parity via the vectorized pandas UDF in functions.hashes.
+  :259-263) — byte-parity via the JVM fold in functions.hashes.
 - R2 keyed stream: the topology_elements write partitions by
   (data_source, shard_id) (plans/pipeline.py), so every (dataSource, shard)
   lands in its own output directory — the Kafka partition-ordering
@@ -23,7 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.hashes import fnv1a32, fnv1a32_col
+from ..functions.hashes import fnv1a32_col
 from ..session import local_frame
 
 SHARD_COUNT = 4  # message_builder.go:15
@@ -33,16 +33,11 @@ def with_shard_id(
     df: DataFrame,
     id_col: str = "external_id",
     shards: int = SHARD_COUNT,
-    jvm: bool = True,
 ) -> DataFrame:
     """R1: shard_id = FNV-1a-32(id) % shards; null ids get pseudo-shard -1
-    ("unknown", message_builder.go:259-263).
-
-    Default is the pure-JVM HOF fold (codegen, no Python workers); the
-    pandas-UDF variant remains for parity testing and very long ids (the
-    HOF fold is O(len) per row either way, but numpy wins on >1KB ids).
-    """
-    h = fnv1a32_col(F.col(id_col)) if jvm else fnv1a32(F.col(id_col))
+    ("unknown", message_builder.go:259-263). The hash is the pure-JVM HOF
+    fold (codegen, no Python workers)."""
+    h = fnv1a32_col(F.col(id_col))
     return df.withColumn(
         "shard_id",
         F.when(F.col(id_col).isNotNull(), F.pmod(h, F.lit(shards))).otherwise(F.lit(-1)),

@@ -5,10 +5,9 @@ scoring, token counting, fingerprinting.
 These extend the reference's dedup family (SURVEY.md §2.5) to the
 web-scale training-data pipeline. Everything is built-in Spark SQL
 functions — HOFs (transform/filter/aggregate) keep shingling and hashing
-JVM-side; the one exception is winnowing's Arrow-vectorized fast path
-(interpreted HOF lambdas lose to numpy there ~9x, see
-winnowing_fingerprints — its declarative HOF twin stays available and
-equality-pinned). Cross-engine determinism for
+JVM-side; the one exception is winnowing's Arrow-vectorized pandas UDF
+(interpreted HOF lambdas measured ~9x slower there, see
+winnowing_fingerprints). Cross-engine determinism for
 the DuckDB oracle comes from md5 (bit-identical in both engines) instead
 of engine-private hash functions.
 
@@ -950,15 +949,34 @@ def top_token_count(toks):
     return F.when(F.size(toks) > 0, fold)
 
 
-def _winnow_arrow(
-    docs: DataFrame, k: int, window: int, text_col: str
+def winnowing_fingerprints(
+    docs: DataFrame,
+    k: int = 5,
+    window: int = 4,
+    text_col: str = "text",
 ) -> DataFrame:
-    """Arrow-vectorized winnowing (see winnowing_fingerprints): one
-    struct-returning pandas UDF, numpy inside — code points via a
-    utf-32-le view (vectorized, no per-char python), gram hashes as k
-    shifted adds over slices, window minima via sliding_window_view.
-    Exactly the same base-257 integer polynomial as the HOF twin and the
-    DuckDB oracle, so all three produce identical values."""
+    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
+    SIGMOD'03 — the MOSS algorithm): hash every character k-gram, slide a
+    w-window over the hash sequence, keep each window's minimum — the
+    guarantee is every match of length >= k+w-1 shares a fingerprint, so
+    the selected minima are a position-robust near-dup/plagiarism
+    signature at ~1/w density.
+
+    Spark shape: row-local — zero shuffles beyond the spread, scan-bound
+    at any corpus size; O(n·w) per row with w small. Hash = the base-257
+    polynomial over the k-gram's code points (the rolling-hash family the
+    winnowing paper itself uses): max value 255·Σ257^j ≈ 1.1e12 fits a
+    long EXACTLY, so Spark and the DuckDB oracle compute identical
+    integers with plain arithmetic. Output keeps the count of distinct
+    minima plus a digest of the sorted set for set-valued comparison.
+
+    One struct-returning Arrow-batched pandas UDF, numpy inside: code
+    points via a utf-32-le view (vectorized, no per-char python), gram
+    hashes as k shifted adds over slices, window minima via
+    sliding_window_view. This is the legitimate UDF-over-builtin case: an
+    all-HOF form evaluates ~n·(k+w) INTERPRETED lambda expressions per row
+    (no codegen inside HOFs), measured ~9x slower at sf0.1 for identical
+    output."""
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -1015,83 +1033,6 @@ def _winnow_arrow(
         F.col("_w.n_grams").alias("n_grams"),
         F.col("_w.n_fingerprints").alias("n_fingerprints"),
         F.col("_w.fingerprints_digest").alias("fingerprints_digest"),
-    )
-
-
-def winnowing_fingerprints(
-    docs: DataFrame,
-    k: int = 5,
-    window: int = 4,
-    text_col: str = "text",
-    impl: str = "arrow",
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS algorithm): hash every character k-gram, slide a
-    w-window over the hash sequence, keep each window's minimum — the
-    guarantee is every match of length >= k+w-1 shares a fingerprint, so
-    the selected minima are a position-robust near-dup/plagiarism
-    signature at ~1/w density.
-
-    Spark shape: entirely row-local HOFs — zero shuffles, scan-bound at
-    any corpus size; O(n·w) per row with w small. Hash = the base-257
-    polynomial over the k-gram's code points (the rolling-hash family the
-    winnowing paper itself uses): max value 255·Σ257^j ≈ 1.1e12 fits a
-    long EXACTLY, so both engines compute identical integers with plain
-    arithmetic. Output keeps the distinct sorted minima plus a digest
-    for set-valued comparison.
-
-    impl="arrow" (default): Arrow-batched pandas UDF — per-char work in
-    numpy (code points via utf-32 view, gram hashes as k shifted adds,
-    window minima via sliding_window_view). This is the legitimate
-    UDF-over-builtin case: the HOF twin evaluates ~n·(k+w) INTERPRETED
-    lambda expressions per row (no codegen inside HOFs), measured ~9x
-    slower at sf0.1 for identical output. impl="hof": the declarative
-    twin, equality pytest-pinned; both match the same DuckDB oracle."""
-    if impl == "arrow":
-        return _winnow_arrow(docs, k, window, text_col)
-    if impl != "hof":
-        raise ValueError("impl in ('arrow', 'hof')")
-    chars = F.lower(F.col(text_col))
-    n = F.length(chars)
-    ng = n - k + 1
-    # code points, one string walk total (no per-gram substring scans)
-    codes = F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.ascii(chars.substr(i, F.lit(1))).cast("long")
-    )
-    base = docs.select(
-        "doc_id", F.when(n >= k, codes).otherwise(F.array().cast("array<long>")).alias("_c")
-    )
-    c = F.col("_c")
-
-    def gram_hash(i):
-        expr = F.element_at(c, i.cast("int"))
-        for j in range(1, k):
-            expr = expr * 257 + F.element_at(c, (i + j).cast("int"))
-        return expr
-
-    hashed = base.select(
-        "doc_id",
-        F.when(
-            F.size(c) >= k,
-            F.transform(F.sequence(F.lit(1), F.size(c) - k + 1), gram_hash),
-        ).otherwise(F.array().cast("array<long>")).alias("_h"),
-    )
-    h = F.col("_h")
-    nw = F.size(h) - window + 1
-    mins = F.when(
-        nw >= 1,
-        F.transform(
-            F.sequence(F.lit(1), nw), lambda i: F.array_min(F.slice(h, i, window))
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    fps = F.array_sort(F.array_distinct(mins))
-    return hashed.select(
-        "doc_id",
-        F.size(h).alias("n_grams"),
-        F.size(fps).alias("n_fingerprints"),
-        F.md5(
-            F.array_join(F.transform(fps, lambda x: x.cast("string")), ",")
-        ).alias("fingerprints_digest"),
     )
 
 

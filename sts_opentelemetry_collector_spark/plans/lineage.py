@@ -16,8 +16,8 @@ or healed the same way.
 The manifest is a directory of small parquet files, one per recorded run,
 read and written on the driver with pyarrow: a handful of rows per run is
 metadata, not data, and a Spark job per manifest access would sit on every
-run's critical path. Spark reads the same directory as a plain parquet
-table (`Manifest.read`).
+run's critical path. Spark can read the same directory as a plain
+parquet table.
 
 Partitioning: lineage_partition = pmod(xxhash64(url), n_buckets). Purely a
 function of the data — stable across runs, cluster sizes, and input
@@ -34,7 +34,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 MANIFEST_SCHEMA = (
     "run_id string, lineage_partition int, input_split string, row_count long, "
@@ -120,9 +120,6 @@ class Manifest:
         tmp = os.path.join(self.path, f"_tmp-{name}")
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(self.path, name))
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
 
 
 def new_run_id() -> str:

@@ -230,10 +230,12 @@ def publish_element_stream(
         # this run's nc+nr
         return {"topology_intake": intake_obs.get["n"]}
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for fut in [pool.submit(f) for f in (_w_envelopes, _w_streams, _w_intake)]:
-            counts.update(fut.result())
-    elements.unpersist()
+    try:
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            for fut in [pool.submit(f) for f in (_w_envelopes, _w_streams, _w_intake)]:
+                counts.update(fut.result())
+    finally:
+        elements.unpersist()
     return counts
 
 
@@ -377,7 +379,7 @@ def _process_batch(
     # unmanifested run's rollup merge, and the resources MERGE is an
     # idempotent refresh, so a crash anywhere still converges.
     rollup = windowed_rollup(logs_back, ts_col="warc_ts", keys=["host"],
-                             window=rollup_window, salt_skew=True)
+                             window=rollup_window)
 
     def _j_resources():
         return upsert_resources(spark, sinks, logs_back)

@@ -117,10 +117,6 @@ class SinkCatalog:
             df, keys=keys, sum_cols=sum_cols, n_buckets=n_buckets, meta=meta
         )
 
-    def rollback_commit(self, name: str, version: int,
-                        meta: dict | None = None) -> int:
-        return self.table(name).rollback(version, meta=meta)
-
     def commits(self, name: str) -> list[dict]:
         return self.table(name).commits()
 

@@ -13,7 +13,6 @@ from sts_opentelemetry_collector_spark.operators.aggregate import (
     DEFAULT_LATENCY_BOUNDS,
     coalesce_envelopes,
     latency_histogram,
-    usage_bytes,
     windowed_rollup,
 )
 from sts_opentelemetry_collector_spark.operators.service_graph import (
@@ -140,16 +139,26 @@ def test_metrics_to_relations_missing_dim_columns(spark, spans):
     assert metrics_to_relations(counters).count() == 0
 
 
-def test_windowed_rollup_salted_equals_plain(spark, webtext):
+def test_windowed_rollup_counts(spark, webtext):
+    """The rollup equals a Python count per (host, hour) of the collected
+    pages, and runs as ONE shuffle: count is partially aggregated on each
+    map task, so the Zipf-skewed hosts need no salted second level."""
+    from collections import Counter
+
     from sts_opentelemetry_collector_spark.operators.parse import parse_pages
 
     pages = parse_pages(webtext).cache()
-    plain = windowed_rollup(pages, keys=["host"], window="1 hour")
-    salted = windowed_rollup(pages, keys=["host"], window="1 hour", salt_skew=True)
-    a = {(r.host, r.window_start): r.page_count for r in plain.collect()}
-    b = {(r.host, r.window_start): r.page_count for r in salted.collect()}
-    assert a == b
-    assert sum(a.values()) == pages.count()
+    rollup = windowed_rollup(pages, keys=["host"], window="1 hour")
+    plan = rollup._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    got = {(r.host, r.window_start): r.page_count for r in rollup.collect()}
+    want = Counter(
+        (r.host, r.warc_ts.replace(minute=0, second=0, microsecond=0))
+        for r in pages.select("host", "warc_ts").collect()
+    )
+    assert got == dict(want)
+    assert sum(got.values()) == pages.count()
+    pages.unpersist()
 
 
 def test_coalesce_envelopes_caps_and_conserves(spark):
@@ -203,13 +212,6 @@ def test_coalesce_envelopes_first_seen_order(spark):
         df, ["data_source", "shard_id"], "ts", "payload", max_envelope_bytes=10_000
     ).first()
     assert canon.payload_list == sorted(f"p-{i}" for i in range(10))
-
-
-def test_usage_bytes(spark):
-    df = spark.createDataFrame([("abc", "de"), ("f", None)], "a string, b string")
-    row = usage_bytes(df, ["a", "b"]).first()
-    assert row.usage_bytes == 3 + 2 + 1 + 0
-    assert row.record_count == 2
 
 
 def test_exp_histogram_bucket_math(spark):

@@ -15,7 +15,6 @@ from sts_opentelemetry_collector_spark.config import (
 )
 from sts_opentelemetry_collector_spark.operators.mapping import (
     apply_mappings,
-    referenced_columns,
     register_sql_functions,
     rewrite_vars,
 )
@@ -132,15 +131,6 @@ def test_condition_eval_error_is_false(pages):
     assert len(out.errors) == 0
 
 
-def test_referenced_columns():
-    cols = ["host", "path", "attrs", "lang", "service"]
-    refs = referenced_columns(
-        ["attrs['cluster'] = 'production'", "concat('urn/', vars.x)", "host"], cols
-    )
-    assert refs == ["attrs", "host"]
-    assert rewrite_vars("concat(vars.a, vars.b)") == "concat(var_a, var_b)"
-
-
 def test_sensitive_attrs_stripped(spark):
     # P12: sts_api_key must never be visible to mapping expressions
     # (internal/model.go:23-28)
@@ -193,6 +183,8 @@ def test_invalid_var_is_mapping_level_error(spark):
     res = apply_mappings(df, MappingSet(components=[bad, good]))
     assert [e["data_source"] for e in res.errors] == ["bad-var"]
     assert res.components.count() == 1  # good mapping unaffected
+    # vars.x reads the materialized var_x column
+    assert rewrite_vars("concat(vars.a, vars.b)") == "concat(var_a, var_b)"
 
 
 def test_regex_rekey_uses_first_match_only(spark):

@@ -8,6 +8,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from sts_opentelemetry_collector_spark.operators import intake
 from sts_opentelemetry_collector_spark.plans.lineage import Manifest
 from sts_opentelemetry_collector_spark.plans.pipeline import run_pipeline
 from sts_opentelemetry_collector_spark.plans.sinks import SinkCatalog
@@ -375,6 +376,7 @@ CRASH_POINTS = {
         lambda pending, *a, **kw: os.path.basename(pending.table.root) == "otel_logs",
     ),
     "manifest_record": (Manifest, "record", lambda *a, **kw: True),
+    "publish_intake": (intake, "write_intake", lambda *a, **kw: True),
 }
 
 
@@ -384,10 +386,11 @@ def test_crash_during_element_write_converges(
 ):
     """The resources MERGE, the rollup merge and the partition stats read
     only the staged logs and run beside the mapping chain. A crash in the
-    element write, in the logs publish or in the manifest record, after
-    both merges committed, must converge on rerun to an uninterrupted
-    run, and run_pipeline must never return or raise while one of those
-    jobs is still running."""
+    element write, in the intake write, in the logs publish or in the
+    manifest record, after both merges committed, must converge on rerun
+    to an uninterrupted run, must leave no persisted frame behind, and
+    run_pipeline must never return or raise while one of those jobs is
+    still running."""
     import threading
     import time
 
@@ -434,9 +437,14 @@ def test_crash_during_element_write_converges(
     owner, attr, hit = CRASH_POINTS[point]
     crash_once(owner, attr, lambda *a, **kw: hit(*a, **kw) and tail_committed())
 
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    persisted_before = persisted()
     with pytest.raises(RuntimeError, match="injected crash"):
         run_pipeline(spark, wt, out, mappings=ms, n_lineage_buckets=4)
     assert running == []
+    assert persisted() <= persisted_before, "crashed run leaked a persisted frame"
     summary = run_pipeline(spark, wt, out, mappings=ms, n_lineage_buckets=4)
     assert running == []
     assert summary["rows"] == 2000

@@ -7,21 +7,11 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 import pandas as pd
 
-from sts_opentelemetry_collector_spark.functions.hashes import (
-    fnv1a32_batch,
-    fnv1a32_py,
-)
+from sts_opentelemetry_collector_spark.functions.hashes import fnv1a32_py
 from sts_opentelemetry_collector_spark.functions.text import (
     extract_text_bytes,
     parse_html_batch,
 )
-
-
-@given(st.lists(st.text(max_size=200), min_size=0, max_size=50))
-@settings(max_examples=50, deadline=None)
-def test_fnv_vectorized_equals_scalar(values):
-    got = fnv1a32_batch(pd.Series(values, dtype=object)).tolist()
-    assert got == [fnv1a32_py(v) for v in values]
 
 
 @given(st.integers(min_value=0, max_value=0xFFFFFFFF))
