@@ -16,7 +16,9 @@ Scale notes:
   partial agg, AQE-coalesced; no skew (hashes are uniform).
 - n-gram Jaccard: candidates come from MinHash-LSH buckets (r=2 rows
   per band), never blocking keys or all-pairs — candidate volume tracks
-  true near-dup density at any scale.
+  true near-dup density at any scale. Each doc is shingled once, in
+  linear time (_token_windows), into one persisted per-doc frame that
+  both the bucket join and the exact-Jaccard verify read.
 - MinHash: per-band minima computed per row (no shuffle), then one
   groupBy band-value to form buckets: pairs only within buckets.
 - SimHash: 16-bit signature via md5-derived token bits, all HOFs.
@@ -42,27 +44,30 @@ def tokens_col(text_col: str = "text"):
     return F.split(F.lower(F.col(text_col)), " ")
 
 
+def _token_windows(toks, n: int, combine):
+    """combine(...) over every window of n consecutive tokens of the array
+    `toks`, as zip_with over n shifted slices of that one array: each
+    row splits its text a fixed number of times, so the cost is linear
+    in its words. (Referencing the token expression inside a lambda
+    instead re-splits the text once per element: interpreted HOFs have
+    no CSE.) The slice length is clamped at 0, so an array of fewer than
+    n tokens yields [] — the DuckDB range(1, len) semantics."""
+    k = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    out = F.slice(toks, 1, k)
+    for j in range(1, n):
+        out = F.zip_with(out, F.slice(toks, j + 1, k), combine)
+    return out
+
+
 def shingles_col(text_col: str = "text", n: int = 2):
-    """Distinct word n-gram shingles via HOFs (no explode — one pass)."""
-    toks = tokens_col(text_col)
-    if n == 2:
-        sh = F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
-        )
-    elif n == 3:
-        sh = F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            ),
-        )
-    else:
+    """Distinct word n-gram shingles ("w1 w2" / "w1 w2 w3"), row-local and
+    linear in the words (_token_windows). A doc of fewer than n tokens —
+    the empty string included — has no shingles: []."""
+    if n not in (2, 3):
         raise ValueError("n in (2, 3)")
-    return F.array_distinct(sh)
+    return F.array_distinct(
+        _token_windows(tokens_col(text_col), n, lambda a, b: F.concat_ws(" ", a, b))
+    )
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -87,48 +92,88 @@ def ngram_jaccard_pairs(
     (collision prob J^2) so candidate volume tracks true near-dup density;
     recall at J=0.5 is 1-(1-J^2)^4 ~ 0.68, rising steeply with J (0.98 at
     J=0.8) — the standard LSH knob, tune (bands, rows) per corpus.
-    Jaccard = |A∩B| / |A∪B| via array HOFs on the surviving candidates;
-    doc_a < doc_b canonicalizes."""
-    keyed = lsh_band_index(docs, bands=bands, n=n)
-    a, b = keyed.alias("a"), keyed.alias("b")
+
+    One pass per document: the persisted per-doc frame (_doc_signatures)
+    holds each doc's shingles, their count and its band buckets. The
+    bucket self-join reads its band rows and drops pairs whose shingle
+    counts cannot reach the threshold before deduplicating pairs that
+    share several bands; the exact-Jaccard verify joins the shingles from
+    the same frame. doc_a < doc_b canonicalizes."""
+    from .cache import register_cache
+
+    sig = register_cache(_doc_signatures(docs, bands=bands, n=n).persist())
+    rows = _band_rows(sig, bands, "sz")
+    a, b = rows.alias("a"), rows.alias("b")
     candidates = (
         a.join(b, on=["band", "bucket"])  # shuffle equi-join, bucket-local
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .where(_size_ratio_ok(F.col("a.sz"), F.col("b.sz"), threshold))
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])  # a pair may share several bands
     )
-    return _jaccard_on_candidates(candidates, docs, n=n, threshold=threshold)
+    return _jaccard_on_candidates(candidates, sig, threshold=threshold)
 
 
-def lsh_band_index(docs: DataFrame, bands: int = 4, n: int = 2) -> DataFrame:
-    """(doc_id, band, bucket) — the corpus MinHash-LSH index. Signatures
-    are row-local, so the index for an ingest batch never touches the
-    rest of the corpus; at 100 TB this frame IS a materialized table
-    bucketed on (band, bucket), appended per batch (see
-    incremental_near_dup)."""
+def _doc_signatures(docs: DataFrame, bands: int, n: int) -> DataFrame:
+    """(doc_id, sh, mh_0.., sz): each doc's distinct shingles, its r=2
+    band buckets and its shingle count. The near-dup operators persist it,
+    because their bucket join and Jaccard verify both read it;
+    lsh_band_index is its band rows, so an index built from the same docs
+    reads that cache instead of shingling again. A doc with no shingles
+    has NULL buckets (see minhash_signatures), which never equi-join."""
     sigs = minhash_signatures(docs, bands, rows_per_band=2, n=n)
-    band_structs = F.array(
+    return sigs.withColumn("sz", F.size("sh"))
+
+
+def _band_rows(sigs: DataFrame, bands: int, *keep: str) -> DataFrame:
+    """(doc_id, *keep, band, bucket): one row per band of a
+    minhash_signatures frame — a single explode, not a union of per-band
+    branches, which would re-evaluate the signature subtree per band."""
+    bb = F.array(
         *[
             F.struct(F.lit(b).alias("band"), F.col(f"mh_{b}").alias("bucket"))
             for b in range(bands)
         ]
     )
-    return sigs.select("doc_id", F.explode(band_structs).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    return sigs.select("doc_id", *keep, F.explode(bb).alias("bb")).select(
+        "doc_id", *keep, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
+
+
+def _size_ratio_ok(sa, sb, threshold: float):
+    """Size-ratio prefilter (provably output-preserving): inter <=
+    min(|A|,|B|) and union >= max(|A|,|B|), so J <= min/max — a pair whose
+    shingle-count ratio is below the threshold cannot pass the exact
+    filter. The final compare is on round(J, 4), so keep a 1e-4 slack
+    (round can lift J by at most 5e-5)."""
+    floor = F.lit(max(threshold - 1e-4, 0.0))
+    return F.least(sa, sb).cast("double") >= floor * F.greatest(sa, sb)
+
+
+def lsh_band_index(docs: DataFrame, bands: int = 4, n: int = 2) -> DataFrame:
+    """(doc_id, band, bucket) — the corpus MinHash-LSH index, the band
+    rows of the per-doc signature. Signatures are row-local, so the index
+    for an ingest batch never touches the rest of the corpus; at 100 TB
+    this frame IS a materialized table bucketed on (band, bucket),
+    appended per batch (see incremental_near_dup). Not persisted: its
+    callers read it once, and where the docs' _doc_signatures frame is
+    already persisted (the dedup stream) the index reads that cache."""
+    return _band_rows(_doc_signatures(docs, bands=bands, n=n), bands)
 
 
 def _jaccard_on_candidates(
     candidates: DataFrame,
-    docs: DataFrame,
-    n: int,
+    shingles: DataFrame,
     threshold: float,
     cache_registry: list | None = None,
 ) -> DataFrame:
-    """Exact-Jaccard verification of LSH candidate pairs: semi-join-prune
-    docs to candidate members, compute raw shingles once per side, filter
-    at the threshold. `docs` must contain every id appearing in
-    `candidates`.
+    """Exact-Jaccard verification of LSH candidate pairs (doc_a, doc_b)
+    against `shingles` (doc_id, sh, sz), which must hold every id of
+    `candidates`: each side's shingles and count join on, the size-ratio
+    prefilter drops pairs that cannot pass before the array intersect
+    runs, and the rest are filtered at the threshold. Jaccard is over RAW
+    shingles: word bigrams are shorter than md5 digests, so
+    intersect/union on them moves less data than on hashes.
 
     cache_registry: callers that run this repeatedly in one session (the
     incremental-dedup stream, one call per micro-batch) pass a list; every
@@ -139,55 +184,17 @@ def _jaccard_on_candidates(
     (cache.release_caches() frees them)."""
     from .cache import register_cache
 
-    # candidate-volume frame referenced 4x downstream (cand_ids union
-    # sides + the two shingle joins): without persist each reference
-    # re-evaluates the signature+join subtree — measured ~2x the query
-    candidates = register_cache(candidates.persist(), cache_registry)
-    # compute shingles ONLY for docs that appear in a candidate pair: the
-    # semi-join prunes rows before the (expensive) shingle projection
-    # runs. NO broadcast hint — on a templated corpus the candidate
-    # member set can be a large fraction of the input (same driver-OOM
-    # argument as apply_dedup's drop list); AQE broadcasts it at runtime
-    # when it measures small, else a shuffled semi-join on uniform doc_id
-    cand_ids = (
-        candidates.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # Jaccard over RAW shingles: word bigrams are shorter than md5 digests,
-    # so intersect/union on them moves less data than on hashes.
-    t = register_cache(
-        docs.join(cand_ids, on="doc_id", how="left_semi")
-        .select(F.col("doc_id"), shingles_col(n=n).alias("sh"))
-        .persist(),  # referenced twice (sh_a / sh_b joins)
-        cache_registry,
-    )
-    # size-ratio prefilter (provably output-preserving): inter <= min(|A|,|B|)
-    # and union >= max(|A|,|B|), so J <= min/max — a pair whose shingle-count
-    # ratio is below the threshold cannot pass the exact filter. The final
-    # compare is on round(J, 4), so keep a 1e-4 slack (round can lift J by
-    # at most 5e-5). Sizes are a 2-int dim joined BEFORE the shingle arrays
-    # attach — the expensive array shuffle + intersect then runs only on
-    # plausible pairs.
-    sizes = t.select("doc_id", F.size("sh").alias("_sz"))
-    candidates = (
-        candidates.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("_sz").alias("_sa")),
-            on="doc_a",
+    def side(s: str) -> DataFrame:
+        return shingles.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("sh").alias(f"sh_{s}"),
+            F.col("sz").alias(f"sz_{s}"),
         )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("_sz").alias("_sb")),
-            on="doc_b",
-        )
-        .where(
-            F.least("_sa", "_sb").cast("double")
-            >= F.lit(max(threshold - 1e-4, 0.0)) * F.greatest("_sa", "_sb")
-        )
-        .select("doc_a", "doc_b")
-    )
+
     paired = (
-        candidates.join(t.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")), on="doc_a")
-        .join(t.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")), on="doc_b")
+        candidates.join(side("a"), on="doc_a")
+        .join(side("b"), on="doc_b")
+        .where(_size_ratio_ok(F.col("sz_a"), F.col("sz_b"), threshold))
     )
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size(F.array_distinct(F.concat(F.col("sh_a"), F.col("sh_b"))))
@@ -248,15 +255,19 @@ def incremental_near_dup_with_index(
     """incremental_near_dup against a PREBUILT (stored) corpus band index
     — the production entry point: corpus_idx is the accumulated
     lsh_band_index table, corpus_docs the doc store (text needed only for
-    the exact-Jaccard verify of surviving candidates, semi-join-pruned).
+    the exact-Jaccard verify: only the corpus docs of surviving
+    candidates, semi-join-pruned, are shingled). The new docs are
+    shingled once, in their persisted per-doc frame (_doc_signatures),
+    which feeds both the bucket joins and the verify.
     cache_registry: see _jaccard_on_candidates — pass a list from
     repeated-call contexts (the dedup stream) and unpersist its entries
     after consuming the result."""
     from .cache import register_cache
 
-    new_idx = register_cache(
-        lsh_band_index(new_docs, bands=bands, n=n).persist(), cache_registry
+    new_sig = register_cache(
+        _doc_signatures(new_docs, bands=bands, n=n).persist(), cache_registry
     )
+    new_idx = _band_rows(new_sig, bands)
     nc = (
         corpus_idx.alias("a")
         .join(new_idx.alias("b"), on=["band", "bucket"])
@@ -268,12 +279,30 @@ def incremental_near_dup_with_index(
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
     )
-    cands = nc.unionByName(nn).dropDuplicates(["doc_a", "doc_b"])
-    docs_all = corpus_docs.select("doc_id", "text").unionByName(
-        new_docs.select("doc_id", "text")
+    # referenced twice (corpus-member semi-join + verify): without persist
+    # the second reference re-runs the bucket joins over the corpus index
+    cands = register_cache(
+        nc.unionByName(nn).dropDuplicates(["doc_a", "doc_b"]).persist(),
+        cache_registry,
     )
+    # doc_b is always a new doc; shingle only the corpus docs that appear
+    # as doc_a. NO broadcast hint — on a templated corpus the candidate
+    # member set can be a large fraction of the input (same driver-OOM
+    # argument as apply_dedup's drop list); AQE broadcasts it at runtime
+    # when it measures small, else a shuffled semi-join on uniform doc_id.
+    # Persisted: both verify sides read it.
+    corpus_sh = register_cache(
+        corpus_docs.join(
+            cands.select(F.col("doc_a").alias("doc_id")), on="doc_id", how="left_semi"
+        )
+        .select("doc_id", shingles_col(n=n).alias("sh"))
+        .withColumn("sz", F.size("sh"))
+        .persist(),
+        cache_registry,
+    )
+    shingles = new_sig.select("doc_id", "sh", "sz").unionByName(corpus_sh)
     pairs = _jaccard_on_candidates(
-        cands, docs_all, n=n, threshold=threshold, cache_registry=cache_registry
+        cands, shingles, threshold=threshold, cache_registry=cache_registry
     )
     return pairs.select(
         F.col("doc_b").alias("new_doc_id"), F.col("doc_a").alias("dup_of"), "jaccard"
@@ -668,20 +697,24 @@ def minhash_signatures(
     Band value = concat of its r row-minima: P(bucket collision) = J^r,
     the standard LSH false-positive knob (r=1 floods buckets via common
     shingles on templated corpora; r=2 squares that probability away).
-    One column per band (mh_0..mh_{bands-1}); md5 keeps the oracle
-    bit-compatible. Row-local — zero shuffle."""
+    Output: doc_id, the shingle array sh, and one column per band
+    (mh_0..mh_{bands-1}); md5 keeps the oracle bit-compatible. Row-local
+    — zero shuffle."""
     n_chunks = bands * rows_per_band
     if n_chunks > 8:
         raise ValueError("bands*rows_per_band <= 8")
-    sh = shingles_col(n=n)
-    # materialize each md5 pass ONCE as its own array column: the chunk
-    # minima below each reference it via substring, and CollapseProject
-    # keeps a multiply-referenced expensive alias materialized instead of
-    # inlining the md5 into every consumer — 2 hash passes, not 8.
+    # materialize the shingles and each md5 pass ONCE as their own array
+    # columns: both md5 passes read sh, the chunk minima below each
+    # reference a pass via substring, and CollapseProject keeps a
+    # multiply-referenced expensive alias materialized instead of
+    # inlining it into every consumer — one shingle build and 2 hash
+    # passes, not 2 and 8.
     # (NB: HOF lambdas must be single-arg — a second (default) parameter is
     # interpreted by PySpark as the element-index argument.)
-    out = spread(docs).select(
+    sh = F.col("sh")
+    out = spread(docs).select("doc_id", shingles_col(n=n).alias("sh")).select(
         "doc_id",
+        "sh",
         F.transform(sh, lambda s: F.md5(s)).alias("_h1"),
         *(
             [F.transform(sh, lambda s: F.md5(F.concat(F.lit("r2:"), s))).alias("_h2")]
@@ -718,20 +751,9 @@ def minhash_lsh_buckets(docs: DataFrame, bands: int = 4) -> DataFrame:
     Output: (band, bucket, bucket_size) for buckets with >1 doc — the
     candidate-pair generator for near-dup at scale (pairs only within
     buckets, never all-pairs)."""
-    sigs = minhash_signatures(docs, bands)
-    # single explode, not a union of per-band branches: a union would
-    # re-evaluate the whole signature subtree once per band
-    band_structs = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), F.col(f"mh_{b}").alias("bucket"))
-            for b in range(bands)
-        ]
-    )
-    exploded = sigs.select("doc_id", F.explode(band_structs).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
     return (
-        exploded.groupBy("band", "bucket")
+        _band_rows(minhash_signatures(docs, bands), bands)
+        .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("bucket_size"), F.min("doc_id").alias("min_doc_id"))
         .where(F.col("bucket_size") > 1)
     )
@@ -1231,6 +1253,14 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _bigram_structs(text_col: str):
+    """array<struct<w1, w2>> of a doc's bigram instances, in token order
+    (_token_windows: linear in the words; [] under 2 tokens)."""
+    return _token_windows(
+        tokens_col(text_col), 2, lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))
+    )
+
+
 def bigram_logprob(
     docs: DataFrame,
     text_col: str = "text",
@@ -1252,17 +1282,7 @@ def bigram_logprob(
     frame grouped by w1 — two partial-agg groupBys + one bigram-keyed
     equi-join (AQE skew-join for templated heads) + a 0-row-safe per-doc
     mean. Mean rounded to 4 (cross-engine summation order)."""
-    toks = tokens_col(text_col)
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.struct(
-                F.element_at(toks, i).alias("w1"),
-                F.element_at(toks, i + 1).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    bigrams = _bigram_structs(text_col)
     # spread: the bigram build + explode feeding the persisted doc_bg
     # would otherwise run single-task on a single-row-group file
     bg = spread(docs).select("doc_id", F.explode(bigrams).alias("b")).select(
@@ -1340,20 +1360,9 @@ def bigram_logprob_scored(
     from .cache import register_cache
 
     def doc_bigrams(docs: DataFrame) -> DataFrame:
-        toks = tokens_col(text_col)
-        bigrams = F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: F.struct(
-                    F.element_at(toks, i).alias("w1"),
-                    F.element_at(toks, i + 1).alias("w2"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
         return (
             spread(docs)  # see bigram_logprob — parallelize the explode
-            .select("doc_id", F.explode(bigrams).alias("b"))
+            .select("doc_id", F.explode(_bigram_structs(text_col)).alias("b"))
             .select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
             .groupBy("doc_id", "w1", "w2")
             .agg(F.count(F.lit(1)).alias("m"))
@@ -1514,39 +1523,14 @@ def decontaminate(
     shingles and inner-joins the broadcast, so cost is corpus-linear with
     NO shuffle of corpus rows (broadcast hash join), then one groupBy on
     the surviving (rare) matches."""
-    # guard: a doc with < n tokens has no shingles (F.sequence(1, size-2)
-    # would DESCEND for short docs instead of being empty). The token
-    # array is materialized ONCE as its own column first — interpreted
-    # HOFs have no CSE, so a tokens_col() inside both the size guard and
-    # the shingle transform would re-split the text twice per row.
-    def tokenized(df):
-        return df.select("doc_id", tokens_col(text_col).alias("_toks"))
-
-    def safe_shingles():
-        toks = F.col("_toks")
-        sh = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.concat_ws(
-                    " ",
-                    *[F.element_at(toks, i + j) for j in range(n)],
-                ),
-            )
-        )
-        return F.when(F.size(toks) >= n, sh).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    bench_sh = (
-        tokenized(benchmark)
-        .select(F.explode(safe_shingles()).alias("shingle"))
-        .distinct()
-    )
+    bench_sh = benchmark.select(
+        F.explode(shingles_col(text_col, n=n)).alias("shingle")
+    ).distinct()
     # spread: a compacted single-file corpus sample would otherwise run
     # the whole shingle explode in ONE task (at 100 TB inputs arrive
     # pre-split and this repartition is a no-op to remove)
-    doc_sh = tokenized(spread(docs)).select(
-        "doc_id", F.explode(safe_shingles()).alias("shingle")
+    doc_sh = spread(docs).select(
+        "doc_id", F.explode(shingles_col(text_col, n=n)).alias("shingle")
     )
     return (
         doc_sh.join(F.broadcast(bench_sh), on="shingle")

@@ -398,6 +398,8 @@ def run_incremental_dedup_stream(
             cache_registry=caches,
         )
         pairs.write.mode("append").parquet(pairs_path)
+        # reads the batch's per-doc signature frame that the dedup above
+        # persisted (still in `caches`): the batch is shingled once
         lsh_band_index(batch, bands=bands, n=n).write.mode("append").parquet(idx_path)
         batch.write.mode("append").parquet(docs_store)
         for c in caches:

@@ -204,3 +204,48 @@ def test_whole_stage_codegen_covers_mapping(spark, webtext):
     # whose mapping never references parsed fields: the page-host branch
     # reads only (url, lang) straight from the scan
     assert "ReadSchema: struct<url:string,lang:string>" in plan
+
+
+def _file_scans(spark, plan, seen: set) -> int:
+    """FileSourceScanExec nodes an executed plan runs. A cached frame's
+    plan is walked once however many InMemoryTableScans read it, and a
+    reused exchange is not walked again."""
+    ident = spark._jvm.java.lang.System.identityHashCode
+    name = plan.getClass().getSimpleName()
+    if name == "FileSourceScanExec":
+        return 1
+    if name == "ReusedExchangeExec":
+        return 0
+    if name == "InMemoryTableScanExec":
+        builder = plan.relation().cacheBuilder()
+        if ident(builder) in seen:
+            return 0
+        seen.add(ident(builder))
+        return _file_scans(spark, builder.cachedPlan(), seen)
+    if name == "AdaptiveSparkPlanExec":
+        return _file_scans(spark, plan.executedPlan(), seen)
+    if name.endswith("QueryStageExec"):
+        return _file_scans(spark, plan.plan(), seen)
+    kids = plan.children()
+    return sum(_file_scans(spark, kids.apply(i), seen) for i in range(kids.size()))
+
+
+def test_ngram_jaccard_pairs_one_pass_per_document(spark, spark_jobs):
+    """The near-dup chain shingles each document once: the bucket
+    self-join and the exact-Jaccard verify both read one persisted
+    per-doc frame, so the `documents` file is scanned once and a noop
+    write of its pairs launches at most 11 jobs on the 500-doc table (19
+    when every consumer rebuilt the shingles)."""
+    from sts_opentelemetry_collector_spark.operators.cache import release_caches
+    from sts_opentelemetry_collector_spark.operators.textops import ngram_jaccard_pairs
+
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    df = ngram_jaccard_pairs(docs)
+    try:
+        with spark_jobs() as jobs:
+            df.write.format("noop").mode("overwrite").save()
+        assert jobs.n <= 11, f"{jobs.n} jobs"
+        plan = df._jdf.queryExecution().executedPlan()
+        assert _file_scans(spark, plan, set()) == 1
+    finally:
+        release_caches()

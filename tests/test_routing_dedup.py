@@ -5,6 +5,7 @@ deduplicator_test.go:17-245."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from sts_opentelemetry_collector_spark.functions.hashes import (
     fnv1a32_col,
@@ -167,6 +168,29 @@ def test_near_dup_plans_have_no_cartesian(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, f"{nm}: cartesian in plan"
         assert "BroadcastNestedLoopJoin" not in plan, f"{nm}: BNLJ in plan"
+
+
+@pytest.mark.parametrize("n", [2, 3])
+def test_near_dup_chain_survives_short_docs(spark, n):
+    """A doc of one token or the empty string has no shingles: it gets a
+    NULL bucket and no pair (the oracle's range(1, len) yields []), and
+    the near-dup pair beside it is still found and grouped."""
+    from sts_opentelemetry_collector_spark.operators.textops import (
+        near_dup_groups,
+        ngram_jaccard_pairs,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, "solo"), (2, ""), (3, "two words"), (4, base), (5, base + " again")],
+        "doc_id long, text string",
+    )
+    # 8 vs 9 bigrams (J = 8/9), 7 vs 8 trigrams (J = 7/8)
+    jac = {2: 0.8889, 3: 0.875}[n]
+    pairs = {tuple(r) for r in ngram_jaccard_pairs(docs, n=n).collect()}
+    assert pairs == {(4, 5, jac)}
+    groups = {tuple(r) for r in near_dup_groups(docs, n=n).collect()}
+    assert groups == {(4, 4), (5, 4)}
 
 
 def test_connected_components_transitive(spark):
