@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """sf1-scale one-shot evidence for the full corpus-dedup chain
-(VERDICT r4 #8): candidate pairs -> star connected components ->
+(VERDICT r4 #8): candidate pairs -> hash-to-min connected components ->
 quality-keeper apply, at two parallelism levels — the LLM-pipeline
 analog of the flagship's pages/sec scaling run.
 
@@ -52,7 +52,7 @@ spark = get_spark(app_name=f"dedup-chain-{{cores}}", cores=cores,
                   extra_conf={{"spark.local.dir": scratch}})
 
 def chain_count(docs):
-    groups = near_dup_groups(docs, algorithm="star")
+    groups = near_dup_groups(docs)
     kept = apply_dedup_keep_best(docs, groups=groups)
     return groups.select("group_rep").distinct().count(), kept.count()
 

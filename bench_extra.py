@@ -72,16 +72,9 @@ def cmd_cc(spark) -> None:
     pairs = textops.ngram_jaccard_pairs(docs, threshold=0.5)
     n_pairs = pairs.count()
     t3 = time.time()
-    groups = textops.connected_components(
-        pairs.select("doc_a", "doc_b"), algorithm="propagation"
-    )
+    groups = textops.connected_components(pairs.select("doc_a", "doc_b"))
     n_groups = groups.count()
     t4 = time.time()
-    groups2 = textops.connected_components(
-        pairs.select("doc_a", "doc_b"), algorithm="star"
-    )
-    n_groups2 = groups2.count()
-    t5 = time.time()
     print(
         json.dumps(
             {
@@ -91,10 +84,8 @@ def cmd_cc(spark) -> None:
                 "candidates_sec": round(t2 - t1, 2),
                 "jaccard_pairs": n_pairs,
                 "jaccard_sec": round(t3 - t2, 2),
-                "cc_propagation_rows": n_groups,
-                "cc_propagation_sec": round(t4 - t3, 2),
-                "cc_star_rows": n_groups2,
-                "cc_star_sec": round(t5 - t4, 2),
+                "cc_rows": n_groups,
+                "cc_sec": round(t4 - t3, 2),
             }
         )
     )

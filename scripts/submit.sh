@@ -26,4 +26,5 @@ spark-submit \
   --conf spark.sql.ansi.enabled=false \
   --conf spark.sql.mapKeyDedupPolicy=LAST_WIN \
   --conf spark.sql.sources.partitionOverwriteMode=dynamic \
+  --conf spark.python.sql.dataFrameDebugging.enabled=false \
   "$HERE/scripts/run_job.py" "$WEBTEXT" "$OUT" "$BUCKETS" "$@"

@@ -761,7 +761,7 @@ GROUP BY s.doc_id
 def q_near_dup_groups(spark, sf):
     """Connected-components grouping over the LSH near-dup pair graph:
     every paired doc -> min doc_id of its component (keep the rep, drop
-    the rest). Spark runs iterative min-label propagation; the oracle
+    the rest). Spark runs hash-to-min connected components; the oracle
     computes the same min-reachable label with a recursive CTE."""
     from .operators.textops import near_dup_groups
 
@@ -791,15 +791,12 @@ SELECT doc_id, group_rep FROM groups
 
 
 def q_near_dup_groups_star(spark, sf):
-    """Connected components via the large-star/small-star alternation
-    (Kiveris et al. SOCC'14) over the same LSH near-dup pair graph —
-    must reach the identical fixpoint as min-label propagation
-    (dedup_groups), checked against the same recursive-CTE oracle.
-    This is the O(log² n)-round variant that survives unbounded
-    component diameters at 10^12 docs."""
+    """The same connected-components grouping as dedup_groups, kept as
+    its own driver query and bench leaf: both call near_dup_groups and
+    are checked against the same recursive-CTE oracle."""
     from .operators.textops import near_dup_groups
 
-    return near_dup_groups(_t(spark, sf, "documents"), algorithm="star")
+    return near_dup_groups(_t(spark, sf, "documents"))
 
 
 def q_dedup_apply(spark, sf):

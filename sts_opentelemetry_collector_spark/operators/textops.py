@@ -172,8 +172,9 @@ def _jaccard_on_candidates(
     `candidates`: each side's shingles and count join on, the size-ratio
     prefilter drops pairs that cannot pass before the array intersect
     runs, and the rest are filtered at the threshold. Jaccard is over RAW
-    shingles: word bigrams are shorter than md5 digests, so
-    intersect/union on them moves less data than on hashes.
+    shingles: word bigrams are shorter than md5 digests, so the
+    intersect on them moves less data than on hashes; the union is
+    counted from the two sizes, never built.
 
     cache_registry: callers that run this repeatedly in one session (the
     incremental-dedup stream, one call per micro-batch) pass a list; every
@@ -196,8 +197,10 @@ def _jaccard_on_candidates(
         .join(side("b"), on="doc_b")
         .where(_size_ratio_ok(F.col("sz_a"), F.col("sz_b"), threshold))
     )
+    # both shingle arrays are distinct (shingles_col), so the union is
+    # counted, not built: |A ∪ B| = |A| + |B| - |A ∩ B|, the same int
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_distinct(F.concat(F.col("sh_a"), F.col("sh_b"))))
+    union = F.col("sz_a") + F.col("sz_b") - inter
     jac = F.round(inter.cast("double") / union, 4)
     pairs = paired.select("doc_a", "doc_b", jac.alias("jaccard")).where(
         F.col("jaccard") >= threshold
@@ -315,7 +318,6 @@ def near_dup_groups(
     threshold: float = 0.5,
     bands: int = 4,
     max_iters: int = 20,
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Connected-components grouping over the LSH-restricted near-dup pair
     graph — the "which docs to keep" step of corpus dedup: every doc in a
@@ -323,20 +325,12 @@ def near_dup_groups(
     rep, drop the rest). Only docs appearing in >=1 near-dup pair are
     emitted; singletons are trivially their own keeper.
 
-    Spark shape: iterative min-label propagation on the symmetric edge
-    list — label(v) <- min(label(v), min over neighbors' labels) — until a
-    fixpoint (converges in O(component diameter) rounds; near-dup
-    components are near-cliques, so typically 2-4). Each round is one
-    shuffle over LSH-candidate-volume edges, never n². At 100 TB pass
-    algorithm="star" — the two-phase large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"),
-    the same join+min primitive with provably O(log² n) rounds for
-    unbounded component diameters; max_iters guards either way (and
-    non-convergence RAISES, never returns partial labels)."""
+    Spark shape: hash-to-min connected_components over the verified pair
+    list — one shuffle per round over LSH-candidate-volume edges, never
+    n², and O(log n) rounds for any component diameter; max_iters guards
+    (non-convergence RAISES, never returns partial labels)."""
     pairs = ngram_jaccard_pairs(docs, n=n, threshold=threshold, bands=bands)
-    return connected_components(
-        pairs.select("doc_a", "doc_b"), max_iters=max_iters, algorithm=algorithm
-    )
+    return connected_components(pairs.select("doc_a", "doc_b"), max_iters=max_iters)
 
 
 def apply_dedup(docs: DataFrame, groups: DataFrame | None = None, **kwargs) -> DataFrame:
@@ -454,225 +448,105 @@ def source_quality_rollup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def connected_components(
     pairs: DataFrame,
     max_iters: int = 20,
-    algorithm: str = "propagation",
     cache_registry: list | None = None,
 ) -> DataFrame:
     """Connected components over an undirected (doc_a, doc_b) pair list:
     (doc_id, group_rep = min doc_id reachable), every paired vertex
     emitted (reps map to themselves; singletons never appear in `pairs`).
 
-    algorithm="propagation": iterative min-label propagation — one
-    edge⋈label shuffle per round, converges in O(component diameter)
-    rounds. Right for near-dup graphs (near-cliques, diameter 2-4).
+    Hash-to-min (Rastogi et al., "Finding Connected Components in
+    Map-Reduce in Logarithmic Rounds", ICDE 2013). The state is (v, C_v),
+    C_v the sorted set of v and its neighbours. Each round is one explode
+    and one groupBy: C_v goes to min(C_v), {min(C_v)} goes to every member
+    of C_v, and the old C_v goes back to v so the reduce can tell whether
+    C_v changed. At the fixpoint every C_v holds the component minimum,
+    and group_rep = array_min(C_v). It takes O(log n) rounds on a path
+    (11 on 300 vertices), where min-label propagation takes O(diameter).
+    The price of one shuffle per round: the row of a component's minimum
+    ends up holding the ids of every member, so one component must fit
+    in one row.
 
-    algorithm="star": the two-phase large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SOCC'14) — the same join+min primitive but provably O(log² n) rounds
-    on ANY graph shape, the 100 TB-safe choice when component diameters
-    are unbounded (e.g. chained boilerplate). Equality with propagation
-    is pytest-pinned, including a long-path graph where propagation's
-    round count is O(n).
+    The count of changed vertices rides each round's localCheckpoint via
+    observe(), so a round costs its own jobs and no probe job. If
+    max_iters rounds pass without a fixpoint it raises RuntimeError: a
+    partial labeling would emit wrong group_rep values downstream.
 
-    Both algorithms raise RuntimeError if max_iters rounds pass without
-    a fixpoint — a silently-partial labeling would emit wrong group_rep
-    values downstream (ADVICE r3).
+    Checkpoint hygiene: localCheckpoint, not persist, truncates each
+    round's lineage (Catalyst would otherwise re-analyze a plan that
+    grows every round). A round's blocks are freed as soon as the next
+    round's checkpoint supersedes them, so the loop holds at most two
+    rounds of blocks. The FINAL round's blocks back the returned frame
+    and are registered in cache_registry (or the session registry) for
+    release after the caller's consuming action (cache.py lifecycle). On
+    a real cluster swap for reliable checkpoint(): an executor loss would
+    otherwise kill the lineage-less job."""
+    from pyspark.sql import Observation
 
-    Checkpoint hygiene: each round's localCheckpoint blocks are freed as
-    soon as the next round's checkpoint supersedes them (they are dead —
-    no later plan references them), so the loop holds at most TWO rounds
-    of blocks at any instant instead of accumulating one per round. The
-    FINAL round's blocks back the returned frame and are registered in
-    cache_registry (or the session registry) for release after the
-    caller's consuming action (cache.py lifecycle)."""
-    # symmetrize via ONE explode, not a union of two selects: a union has
-    # two subtrees each re-evaluating the (expensive) upstream pair
-    # generator before the persist below can serve either
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("doc_a").alias("doc_a"), F.col("doc_b").alias("doc_b")),
-                F.struct(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")),
-            )
-        ).alias("e")
-    ).select("e.doc_a", "e.doc_b")
-    if algorithm == "star":
-        return _cc_two_phase_star(
-            edges, max_iters=max_iters, cache_registry=cache_registry
-        )
-    if algorithm != "propagation":
-        raise ValueError("algorithm in ('propagation', 'star')")
-    return _cc_propagation(edges, max_iters=max_iters, cache_registry=cache_registry)
-
-
-def _cc_propagation(
-    edges_sym: DataFrame,
-    max_iters: int = 20,
-    cache_registry: list | None = None,
-) -> DataFrame:
-    from .cache import CheckpointHandle, register_cache
-
-    edges = edges_sym.persist()
-    # localCheckpoint INSIDE iterative loops, not persist: each round's
-    # plan references the previous round's twice (labels ⋈ neigh_min),
-    # so without lineage truncation the logical tree DOUBLES per round
-    # and Catalyst analysis time grows exponentially (measured: round 3
-    # of the star loop took >140 s on 150 edges before this). persist()
-    # caches data but Catalyst still re-analyzes the full nested plan;
-    # localCheckpoint replaces it with a constant-depth RDD-scan leaf.
-    # On a real cluster swap for reliable checkpoint() (an executor loss
-    # would otherwise kill the lineage-less job).
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    prev = CheckpointHandle(labels)
-    converged = False
-    for _ in range(max_iters):
-        neigh_min = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("doc_b"), F.col("label").alias("nl")
-                ),
-                on="doc_b",
-            )
-            .groupBy(F.col("doc_a").alias("doc_id"))
-            .agg(F.min("nl").alias("nmin"))
-        )
-        updated = (
-            labels.join(neigh_min, on="doc_id", how="left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
-                    "label"
-                ),
-                (F.col("nmin") < F.col("label")).alias("_chg"),
-            )
-        ).localCheckpoint()
-        # updated is eagerly materialized — the previous round's blocks
-        # are now unreachable by any future plan; free them immediately
-        prev.free()
-        prev = CheckpointHandle(updated)
-        changed = updated.where(F.col("_chg")).limit(1).count()
-        labels = updated.drop("_chg")
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        prev.free()  # partial labels are garbage — drop their blocks now
-        raise RuntimeError(
-            f"connected_components(propagation) did not converge in {max_iters} "
-            "rounds (component diameter exceeds max_iters) — partial labels "
-            "would be WRONG; raise max_iters or use algorithm='star'"
-        )
-    # the final round's blocks back the returned frame: deferred release
-    # (register the handle of the CHECKPOINTED frame itself — labels is a
-    # projection over it, whose analyzed plan is not the LogicalRDD)
-    register_cache(prev, cache_registry)
-    return labels.select("doc_id", F.col("label").alias("group_rep"))
-
-
-def _cc_two_phase_star(
-    edges_sym: DataFrame,
-    max_iters: int = 20,
-    cache_registry: list | None = None,
-) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al. SOCC'14 Alg. 2)
-    over a SYMMETRIC edge list. Each round:
-
-      large-star: per node u with m = min(N(u) ∪ {u}), connect every
-                  strictly-larger neighbor to m   — emit (v, m) for v > u
-      small-star: orient edges large→small (u > v), per node u with
-                  m = min(N(u) ∪ {u}), connect u and its smaller
-                  neighbors to m                  — emit (v, m) ∪ (u, m)
-
-    Both phases are one groupBy(node) min + one re-join per phase —
-    identical shuffle primitive to propagation, but the edge list
-    contracts doubly-logarithmically: O(log² n) rounds on any graph
-    (a path graph converges in ~log n rounds vs n for propagation).
-    Fixpoint when the small-star output equals the previous round's
-    (set equality via exceptAll on canonicalized edges). At the
-    fixpoint every non-root points directly at its component min.
-
-    Lineage is truncated per round with localCheckpoint — see the
-    propagation loop for why persist alone blows up analysis time."""
     from .cache import CheckpointHandle, register_checkpoint
 
-    cur = (
-        edges_sym.where(F.col("doc_a") != F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .localCheckpoint()
+    # symmetrize via ONE explode, not a union of two selects: a union has
+    # two subtrees each re-evaluating the (expensive) upstream pair
+    # generator before its persist can serve either
+    state = (
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("doc_a").alias("v"), F.col("doc_b").alias("u")),
+                    F.struct(F.col("doc_b").alias("v"), F.col("doc_a").alias("u")),
+                )
+            ).alias("e")
+        )
+        .groupBy(F.col("e.v").alias("v"))
+        .agg(F.collect_set("e.u").alias("n"))
+        .select("v", F.array_sort(F.array_union(F.array("v"), "n")).alias("c"))
     )
-    cur_n = cur.count()
-    prev = CheckpointHandle(cur)
-    converged = False
+
+    def msg(dst, ids, old: bool):
+        return F.struct(dst.alias("dst"), ids.alias("c"), F.lit(old).alias("old"))
+
+    c = F.col("c")
+    m = c[0]  # C_v is sorted: its min
+    msgs = F.concat(
+        F.array(msg(m, c, False), msg(F.col("v"), c, True)),
+        F.transform(c, lambda u: msg(u, F.array(m), False)),
+    )
+    prev = None
     for _ in range(max_iters):
-        # large-star over the symmetric closure of cur
-        sym = cur.select("doc_a", "doc_b").unionByName(
-            cur.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        ).dropDuplicates(["doc_a", "doc_b"])
-        mins = sym.groupBy("doc_a").agg(
-            F.least(F.min("doc_b"), F.first("doc_a")).alias("m")
-        )
-        large = (
-            sym.where(F.col("doc_b") > F.col("doc_a"))
-            .join(mins, on="doc_a")
-            .select(F.col("doc_b").alias("doc_a"), F.col("m").alias("doc_b"))
-            .where(F.col("doc_a") != F.col("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        # small-star on large→small orientation
-        oriented = large.select(
-            F.greatest("doc_a", "doc_b").alias("doc_a"),
-            F.least("doc_a", "doc_b").alias("doc_b"),
-        ).dropDuplicates(["doc_a", "doc_b"])
-        smins = oriented.groupBy("doc_a").agg(F.min("doc_b").alias("m"))
-        small = (
-            oriented.join(smins, on="doc_a")
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("doc_b").alias("doc_a"), F.col("m").alias("doc_b")),
-                        F.struct(F.col("doc_a").alias("doc_a"), F.col("m").alias("doc_b")),
+        obs = Observation()
+        state = (
+            state.select(F.explode(msgs).alias("msg"))
+            .groupBy(F.col("msg.dst").alias("v"))
+            .agg(
+                F.array_sort(
+                    F.array_distinct(
+                        F.flatten(
+                            F.collect_list(F.when(~F.col("msg.old"), F.col("msg.c")))
+                        )
                     )
-                ).alias("e")
+                ).alias("c"),
+                F.max(F.when(F.col("msg.old"), F.col("msg.c"))).alias("old"),
             )
-            .select("e.doc_a", "e.doc_b")
-            .where(F.col("doc_a") != F.col("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"])
+            .observe(obs, F.count_if(F.col("c") != F.col("old")).alias("changed"))
+            .select("v", "c")
             .localCheckpoint()
         )
-        # single-probe fixpoint test: both sides are DEDUPED edge sets, so
-        # |small| == |cur| plus one-sided containment (small \ cur == ∅)
-        # implies set equality — one count (whose value carries to the next
-        # round as cur_n) and at most one exceptAll job per round, instead
-        # of two exceptAll jobs; the exceptAll is skipped entirely when the
-        # cardinalities already differ.
-        small_n = small.count()
-        changed = small_n != cur_n or small.exceptAll(cur).limit(1).count() > 0
-        # the probe was the last reader of the previous round's blocks —
-        # free them now that small's checkpoint supersedes them
-        prev.free()
-        prev = CheckpointHandle(small)
-        cur, cur_n = small, small_n
-        if not changed:
-            converged = True
+        # state is eagerly materialized: the previous round's blocks are
+        # unreachable by any future plan, free them now
+        if prev is not None:
+            prev.free()
+        prev = CheckpointHandle(state)
+        if obs.get["changed"] == 0:
             break
-    if not converged:
-        prev.free()  # partial contraction is garbage — drop its blocks now
+    else:
+        if prev is not None:
+            prev.free()  # partial labels are garbage: drop their blocks now
         raise RuntimeError(
-            f"connected_components(star) did not converge in {max_iters} rounds "
-            "— raise max_iters (O(log² n) rounds suffice for any graph)"
+            f"connected_components did not converge in {max_iters} rounds: "
+            "partial labels would be WRONG; raise max_iters"
         )
-    # fixpoint edges are (non-root -> root); roots self-map
-    labels = cur.select(F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("group_rep")).unionByName(
-        cur.select(F.col("doc_b").alias("doc_id"), F.col("doc_b").alias("group_rep"))
-    ).groupBy("doc_id").agg(F.min("group_rep").alias("group_rep"))
     # the final round's blocks back the returned frame: deferred release
-    register_checkpoint(cur, cache_registry)
-    return labels
+    register_checkpoint(state, cache_registry)
+    return state.select(F.col("v").alias("doc_id"), F.array_min(c).alias("group_rep"))
 
 
 def spread(docs: DataFrame) -> DataFrame:

@@ -75,7 +75,8 @@ CHECKPOINT_EVERY = 16
 
 
 class CommitConflict(RuntimeError):
-    """Another writer claimed the commit version first."""
+    """Another writer claimed the commit version first, or committed a
+    change to a file this commit removes after this commit read it."""
 
 
 def _union_schema(table: str | None, commit: str | None) -> str | None:
@@ -119,13 +120,16 @@ class PendingCommit:
         columns), visible only to the holder of this object."""
         return self.table._read_files(spark, self.files, self.schema_json)
 
-    def publish(self, remove: list[str] | None = None) -> int:
+    def publish(self, remove: list[str] | None = None,
+                read_version: int | None = None) -> int:
         """Make the staged files visible atomically; returns the commit
         version. `remove` additionally drops live files (overwrite /
-        merge shapes)."""
+        merge shapes); `read_version` is the snapshot they were read at
+        (see TxLogTable._commit)."""
         return self.table._commit(
             self.op, add=self.files, remove=remove or [],
             schema_json=self.schema_json, meta=self.meta,
+            read_version=read_version,
         )
 
 
@@ -149,6 +153,10 @@ class TxLogTable:
             int(f[:-5]) for f in os.listdir(d)
             if f.endswith(".json") and f[:-5].isdigit()
         )
+
+    def _tip(self) -> int:
+        """The newest commit version; 0 for a table with no commit."""
+        return (self.versions() or [0])[-1]
 
     def commits(self) -> list[dict]:
         """All commit records in version order (each with a `version` key)."""
@@ -235,7 +243,14 @@ class TxLogTable:
         return list(live), schema
 
     def _commit(self, op: str, add: list[str], remove: list[str],
-                schema_json: str | None, meta: dict, retries: int = 20) -> int:
+                schema_json: str | None, meta: dict,
+                read_version: int | None = None, retries: int = 20) -> int:
+        """Claim the next version for {add, remove}. A commit that removes
+        files passes the `read_version` its remove set was computed at:
+        before each claim it is re-validated against every commit since,
+        and CommitConflict is raised if one of them removed or added a
+        file of the remove set — rebasing onto that tip would publish a
+        rewrite of rows that are no longer live (a lost update)."""
         rec = {
             "op": op,
             "ts": time.time(),
@@ -252,7 +267,9 @@ class TxLogTable:
             os.fsync(f.fileno())
         try:
             for _ in range(retries):
-                version = (self.versions() or [0])[-1] + 1
+                version = self._tip() + 1
+                if read_version is not None:
+                    self._validate(read_version, version, remove)
                 try:
                     os.link(tmp, self._commit_path(version))  # atomic claim
                     self._maybe_write_checkpoint(version)
@@ -264,6 +281,24 @@ class TxLogTable:
             )
         finally:
             os.unlink(tmp)
+
+    def _validate(self, read_version: int, version: int, remove: list[str]) -> None:
+        """Raise CommitConflict if a commit in (read_version, version)
+        removed or added a file of `remove`."""
+        doomed = set(remove)
+        if not doomed or version <= read_version + 1:
+            return
+        for v in self.versions():
+            if not read_version < v < version:
+                continue
+            with open(self._commit_path(v)) as f:
+                rec = json.load(f)
+            hit = doomed.intersection(rec.get("remove", []) + rec.get("add", []))
+            if hit:
+                raise CommitConflict(
+                    f"commit {v} ({rec.get('op')}) changed {len(hit)} file(s) "
+                    f"this commit removes, read at version {read_version}"
+                )
 
     # ---- write paths --------------------------------------------------
 
@@ -316,9 +351,10 @@ class TxLogTable:
 
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None,
                   meta: dict | None = None) -> int:
-        live, _ = self.snapshot()
+        base = self._tip()
+        live, _ = self.snapshot(base)
         return self.stage(df, partition_by, op="overwrite", meta=meta).publish(
-            remove=live
+            remove=live, read_version=base
         )
 
     def overwrite_partition(self, df: DataFrame, partition_dir: str,
@@ -326,7 +362,8 @@ class TxLogTable:
         """Replace exactly the live files under one hive partition dir
         (e.g. 'version=7') — idempotent re-apply of a versioned write."""
         pref = partition_dir.rstrip("/") + os.sep
-        live, _ = self.snapshot()
+        base = self._tip()
+        live, _ = self.snapshot(base)
         doomed = [p for p in live if p.startswith(pref)]
         staged = self.stage(df, partition_by=None, op="overwrite_partition",
                             meta=meta)
@@ -341,7 +378,7 @@ class TxLogTable:
             )
             moved.append(dst_rel)
         staged.files = sorted(moved)
-        return staged.publish(remove=doomed)
+        return staged.publish(remove=doomed, read_version=base)
 
     def rollback(self, version: int, meta: dict | None = None) -> int:
         """Append a commit that EXACTLY inverts `version`: its added
@@ -352,6 +389,7 @@ class TxLogTable:
         (the vacuum retention contract) and (b) no LATER commit has
         touched the same files — i.e. roll back only the table tip, the
         only shape the run-heal ever needs."""
+        base = self._tip()
         target = next((r for r in self.commits() if r["version"] == version), None)
         if target is None:
             raise ValueError(f"no commit {version}")
@@ -367,6 +405,7 @@ class TxLogTable:
         return self._commit(
             "rollback", add=restore, remove=target.get("add", []),
             schema_json=None, meta={**(meta or {}), "rolled_back": version},
+            read_version=base,
         )
 
     # ---- read paths ---------------------------------------------------
@@ -431,7 +470,8 @@ class TxLogTable:
         )
         new = df.withColumn("_bucket", bucket).withColumn("_gen", F.lit(1))
 
-        live, schema = self.snapshot()
+        base = self._tip()
+        live, schema = self.snapshot(base)
         if live:
             # bounded driver-side collect: <= n_buckets values
             touched = sorted(
@@ -482,7 +522,7 @@ class TxLogTable:
             op=op,
             meta=meta,
         )
-        staged.publish(remove=doomed)
+        staged.publish(remove=doomed, read_version=base)
         rewritten = int(obs.get["n"] or 0)
         untouched = [p for p in live if p not in set(doomed)]
         if not untouched:
@@ -563,7 +603,8 @@ class TxLogTable:
         removed."""
         import math
 
-        live, schema = self.snapshot()
+        base = self._tip()
+        live, schema = self.snapshot(base)
         fields = StructType.fromJson(json.loads(schema)).fields if live else []
         by_dir: dict[str, list[str]] = {}
         for rel in live:
@@ -602,6 +643,7 @@ class TxLogTable:
         self._commit(
             "compact", add=all_add, remove=all_remove, schema_json=None,
             meta={"compacted_partitions": len({os.path.dirname(r) for r in all_remove})},
+            read_version=base,
         )
         return len(all_remove)
 

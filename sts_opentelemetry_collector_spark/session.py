@@ -60,6 +60,12 @@ def get_spark(
         # Idempotent resume: reruns overwrite exactly the partitions they
         # recompute (lineage.py), never the whole table.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # No Python call-site capture per Column call: PySpark 4.1 wraps
+        # every functions.* / Column call in a JVM origin set/clear and a
+        # stack walk (13 py4j calls for one F.col instead of 3) only to
+        # add Python call sites to error messages; analysis errors still
+        # name the offending column.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -206,28 +206,38 @@ def test_whole_stage_codegen_covers_mapping(spark, webtext):
     assert "ReadSchema: struct<url:string,lang:string>" in plan
 
 
-def _file_scans(spark, plan, seen: set) -> int:
-    """FileSourceScanExec nodes an executed plan runs. A cached frame's
-    plan is walked once however many InMemoryTableScans read it, and a
-    reused exchange is not walked again."""
+def _plan_nodes(spark, plan, seen: set):
+    """Every node an executed plan runs. A cached frame's plan is walked
+    once however many InMemoryTableScans read it, and a reused exchange
+    is not walked again."""
     ident = spark._jvm.java.lang.System.identityHashCode
     name = plan.getClass().getSimpleName()
-    if name == "FileSourceScanExec":
-        return 1
     if name == "ReusedExchangeExec":
-        return 0
+        return
+    yield plan
     if name == "InMemoryTableScanExec":
         builder = plan.relation().cacheBuilder()
-        if ident(builder) in seen:
-            return 0
-        seen.add(ident(builder))
-        return _file_scans(spark, builder.cachedPlan(), seen)
+        if ident(builder) not in seen:
+            seen.add(ident(builder))
+            yield from _plan_nodes(spark, builder.cachedPlan(), seen)
+        return
     if name == "AdaptiveSparkPlanExec":
-        return _file_scans(spark, plan.executedPlan(), seen)
+        yield from _plan_nodes(spark, plan.executedPlan(), seen)
+        return
     if name.endswith("QueryStageExec"):
-        return _file_scans(spark, plan.plan(), seen)
+        yield from _plan_nodes(spark, plan.plan(), seen)
+        return
     kids = plan.children()
-    return sum(_file_scans(spark, kids.apply(i), seen) for i in range(kids.size()))
+    for i in range(kids.size()):
+        yield from _plan_nodes(spark, kids.apply(i), seen)
+
+
+def _file_scans(spark, plan, seen: set) -> int:
+    """FileSourceScanExec nodes an executed plan runs (see _plan_nodes)."""
+    return sum(
+        n.getClass().getSimpleName() == "FileSourceScanExec"
+        for n in _plan_nodes(spark, plan, seen)
+    )
 
 
 def test_ngram_jaccard_pairs_one_pass_per_document(spark, spark_jobs):
@@ -235,7 +245,9 @@ def test_ngram_jaccard_pairs_one_pass_per_document(spark, spark_jobs):
     self-join and the exact-Jaccard verify both read one persisted
     per-doc frame, so the `documents` file is scanned once and a noop
     write of its pairs launches at most 11 jobs on the 500-doc table (19
-    when every consumer rebuilt the shingles)."""
+    when every consumer rebuilt the shingles). The verify counts the
+    Jaccard union from the two shingle counts: no node builds it with
+    array_distinct(concat(...))."""
     from sts_opentelemetry_collector_spark.operators.cache import release_caches
     from sts_opentelemetry_collector_spark.operators.textops import ngram_jaccard_pairs
 
@@ -247,5 +259,11 @@ def test_ngram_jaccard_pairs_one_pass_per_document(spark, spark_jobs):
         assert jobs.n <= 11, f"{jobs.n} jobs"
         plan = df._jdf.queryExecution().executedPlan()
         assert _file_scans(spark, plan, set()) == 1
+        built = [
+            n.getClass().getSimpleName()
+            for n in _plan_nodes(spark, plan, set())
+            if "array_distinct(concat" in n.verboseStringWithOperatorId()
+        ]
+        assert not built, f"union built in {built}"
     finally:
         release_caches()

@@ -52,3 +52,15 @@ def test_every_query_has_stable_schema(spark):
         # driver-compat: no duplicate column names (hash compare sorts by name)
         names = [f.name for f in df.schema]
         assert len(names) == len(set(names)), name
+
+
+def test_session_skips_call_site_capture(spark):
+    """get_spark turns off PySpark's per-Column call-site capture (a JVM
+    origin set/clear and a stack walk on every functions.* call), and an
+    analysis error still names the offending column."""
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    df = spark.createDataFrame([(1,)], "a long")
+    with pytest.raises(AnalysisException, match="nope"):
+        df.select("nope")

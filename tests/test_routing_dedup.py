@@ -410,30 +410,8 @@ def test_incremental_dedup_completeness(spark):
     assert old & inc == set()  # corpus pairs never recomputed
 
 
-def test_connected_components_star_matches_propagation(spark):
-    """large-star/small-star (Kiveris et al.) must produce EXACTLY the
-    propagation labeling on an arbitrary seeded random graph: same vertex
-    set, same group_rep (component min) per vertex."""
-    import random
-
-    from sts_opentelemetry_collector_spark.operators.textops import (
-        connected_components,
-    )
-
-    rng = random.Random(42)
-    edges = {(rng.randrange(200), rng.randrange(200)) for _ in range(150)}
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    # this sparse supercritical graph has component diameter > 20: the
-    # default max_iters correctly RAISES for propagation (the pre-r4 code
-    # returned silently-wrong labels here), while star needs only ~5
-    prop = {r.doc_id: r.group_rep
-            for r in connected_components(pairs, algorithm="propagation",
-                                          max_iters=100).collect()}
-    star = {r.doc_id: r.group_rep
-            for r in connected_components(pairs, algorithm="star").collect()}
-    assert star == prop
-    # cross-check against python union-find
+def _union_find(edges) -> dict:
+    """Ground-truth components: vertex -> min vertex of its component."""
     parent = {}
 
     def find(x):
@@ -447,15 +425,54 @@ def test_connected_components_star_matches_propagation(spark):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    assert star == {v: find(v) for v in parent}
+    return {v: find(v) for v in parent}
+
+
+def _hash_to_min_rounds(edges) -> int:
+    """Rounds the hash-to-min loop runs on `edges`, the final round that
+    changes nothing included: a pure-python model of the same messages."""
+    cs: dict = {}
+    for a, b in edges:
+        cs.setdefault(a, {a}).add(b)
+        cs.setdefault(b, {b}).add(a)
+    rounds = 0
+    while True:
+        rounds += 1
+        new = {v: set() for v in cs}
+        for c in cs.values():
+            m = min(c)
+            new[m] |= c
+            for u in c:
+                new[u].add(m)
+        if new == cs:
+            return rounds
+        cs = new
+
+
+def test_connected_components_star_matches_propagation(spark):
+    """Hash-to-min labels equal union-find on a seeded random graph: same
+    vertex set, same group_rep (component min) per vertex. This sparse
+    supercritical graph has component diameter > 20, which min-label
+    propagation could not cross in the default max_iters."""
+    import random
+
+    from sts_opentelemetry_collector_spark.operators.textops import (
+        connected_components,
+    )
+
+    rng = random.Random(42)
+    edges = {(rng.randrange(200), rng.randrange(200)) for _ in range(150)}
+    edges = [(a, b) for a, b in edges if a != b]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {r.doc_id: r.group_rep for r in connected_components(pairs).collect()}
+    assert got == _union_find(edges)
 
 
 def test_connected_components_star_long_path(spark):
-    """The O(log² n) guarantee that justifies star at 100 TB: a 60-vertex
-    path (diameter 59, descending ids so the min must traverse it) where
-    naive propagation needs O(n) rounds. star converges within 10 rounds;
-    propagation capped at the same 10 must RAISE (ADVICE r3: silent
-    partial labels are wrong), not return garbage."""
+    """A 60-vertex path (diameter 59, descending ids so the min must
+    traverse it) converges within 10 rounds (hash-to-min needs 8, where
+    min-label propagation needs O(n)); capped below that at 3 rounds it
+    must RAISE, not return partial labels."""
     import pytest as _pytest
 
     from sts_opentelemetry_collector_spark.operators.textops import (
@@ -464,11 +481,11 @@ def test_connected_components_star_long_path(spark):
 
     path = [(i + 1, i) for i in range(1, 60)]  # 60-59-...-1
     pairs = spark.createDataFrame(path, "doc_a long, doc_b long")
-    star = {r.doc_id: r.group_rep
-            for r in connected_components(pairs, algorithm="star", max_iters=10).collect()}
-    assert star == {v: 1 for v in range(1, 61)}
+    got = {r.doc_id: r.group_rep
+           for r in connected_components(pairs, max_iters=10).collect()}
+    assert got == {v: 1 for v in range(1, 61)}
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, algorithm="propagation", max_iters=10).collect()
+        connected_components(pairs, max_iters=3).collect()
 
 
 def test_top_token_count_single_pass_equals_naive(spark):
@@ -509,11 +526,14 @@ def test_top_token_count_single_pass_equals_naive(spark):
         assert r.fast == r.slow, (r.doc_id, r.fast, r.slow)
 
 
-def test_connected_components_star_more_shapes(spark):
-    """star == union-find ground truth on adversarial shapes: a dense
-    near-clique, a binary-tree hierarchy, and two stars joined by a
-    bridge edge (the shapes large-star/small-star reorders most
-    aggressively)."""
+def test_connected_components_star_more_shapes(spark, spark_jobs):
+    """Hash-to-min == union-find ground truth on adversarial shapes: a
+    dense near-clique, a binary-tree hierarchy, and two stars joined by a
+    bridge edge. Each round is one explode + one groupBy whose
+    localCheckpoint carries the changed-vertex count (observe), so the
+    loop and the collect launch at most 2 jobs per round plus 3, and no
+    per-round probe job."""
+    from sts_opentelemetry_collector_spark.operators.cache import release_caches
     from sts_opentelemetry_collector_spark.operators.textops import (
         connected_components,
     )
@@ -524,24 +544,15 @@ def test_connected_components_star_more_shapes(spark):
         (300, 300 + i) for i in range(1, 8)
     ] + [(207, 307)]  # bridge
     edges = clique + tree + two_stars
+    rounds = _hash_to_min_rounds(edges)
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    star = {r.doc_id: r.group_rep
-            for r in connected_components(pairs, algorithm="star").collect()}
-
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    assert star == {v: find(v) for v in parent}
+    try:
+        with spark_jobs() as jobs:
+            got = {r.doc_id: r.group_rep for r in connected_components(pairs).collect()}
+        assert got == _union_find(edges)
+        assert jobs.n <= 2 * rounds + 3, f"{jobs.n} jobs for {rounds} rounds"
+    finally:
+        release_caches()
 
 
 def test_winnowing_guarantee_and_model(spark):

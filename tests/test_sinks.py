@@ -476,3 +476,60 @@ def test_concurrent_writers_race_commit_claims(spark, tmp_path):
     # every commit file is intact and attributable to exactly one writer
     writers = [c["meta"]["writer"] for c in tbl.commits()]
     assert writers.count(0) == n_each and writers.count(1000) == n_each
+
+
+def test_concurrent_merges_never_lose_an_update(spark, tmp_path):
+    """Two threads merge_upsert one table from the same snapshot (a
+    barrier holds each after its snapshot read until both have read).
+    Both rewrite the same bucket file: the loser of the commit race must
+    raise CommitConflict, not rebase its stale rewrite onto the new tip
+    (which left both rewrites live: the winner's key duplicated with its
+    old value). A retry of the loser then lands on the winner's table."""
+    import threading
+
+    from sts_opentelemetry_collector_spark.plans.txlog import CommitConflict, TxLogTable
+
+    schema = "k long, v string"
+    tbl = TxLogTable(str(tmp_path / "merged"))
+    tbl.merge_upsert(
+        spark.createDataFrame([(1, "old"), (2, "old")], schema), keys=["k"], n_buckets=1
+    )
+    barrier = threading.Barrier(2, timeout=120)
+    snapshot = tbl.snapshot
+
+    def held_snapshot(at_version=None):
+        out = snapshot(at_version)
+        barrier.wait()
+        return out
+
+    tbl.snapshot = held_snapshot
+    updates = {1: (1, "a"), 2: (2, "b")}
+    outcome: dict = {}
+
+    def writer(k: int):
+        try:
+            tbl.merge_upsert(
+                spark.createDataFrame([updates[k]], schema), keys=["k"], n_buckets=1
+            )
+            outcome[k] = "committed"
+        except CommitConflict:
+            outcome[k] = "conflict"
+        except Exception as e:  # pragma: no cover
+            outcome[k] = repr(e)
+
+    threads = [threading.Thread(target=writer, args=(k,)) for k in updates]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    tbl.snapshot = snapshot
+    assert sorted(outcome.values()) == ["committed", "conflict"], outcome
+    (won,) = [k for k, o in outcome.items() if o == "committed"]
+    (lost,) = [k for k, o in outcome.items() if o == "conflict"]
+    rows = sorted(tuple(r) for r in tbl.read(spark).select("k", "v").collect())
+    assert rows == sorted([updates[won], (lost, "old")])
+    tbl.merge_upsert(
+        spark.createDataFrame([updates[lost]], schema), keys=["k"], n_buckets=1
+    )
+    rows = sorted(tuple(r) for r in tbl.read(spark).select("k", "v").collect())
+    assert rows == [(1, "a"), (2, "b")]
