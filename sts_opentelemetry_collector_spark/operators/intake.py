@@ -15,12 +15,18 @@ ordering). Scale note: one payload row per api key — per-key topology is
 dimension-scale (the reference materializes the same collection in memory
 per batch), so the per-key collect_list is bounded; the heavy stream stays
 distributed until this final per-key fold, which shuffles once on api_key.
+
+The intake sink is a full snapshot per publish, like the reference's POST:
+one txlog overwrite replaces every earlier file atomically, so an api key
+that no longer occurs leaves nothing behind.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from ..plans.txlog import TxLogTable
 
 
 def intake_payloads(
@@ -82,18 +88,17 @@ def write_intake(
     api_key_col: str = "api_key",
     sort_col: str = "external_id",
 ) -> None:
-    """Sink write honoring the intake contract: one directory partition per
-    api key, rows within each file in canonical sort order
-    (sortWithinPartitions after repartition => each api key's stream is a
-    single ordered sequence, the POST-body analog)."""
-    (
+    """Sink write honoring the intake contract: one txlog overwrite of the
+    table at `path` with one hive partition per api key, rows within each
+    file in canonical sort order (sortWithinPartitions after repartition
+    => each api key's stream is a single ordered sequence, the POST-body
+    analog)."""
+    TxLogTable(path).overwrite(
         payloads_or_elements.repartition(F.col(api_key_col))
         # leading sort key MUST be the partition column: the parquet writer
         # requires ordering by partition cols and would re-sort (unstably)
         # otherwise; a (api_key, external_id) sort satisfies that prefix so
         # the writer preserves our canonical order.
-        .sortWithinPartitions(api_key_col, sort_col)
-        .write.mode("overwrite")
-        .partitionBy(api_key_col)
-        .parquet(path)
+        .sortWithinPartitions(api_key_col, sort_col),
+        partition_by=[api_key_col],
     )

@@ -618,12 +618,15 @@ def run_pipeline(
         # ---- tombstones for removed mappings (R5); count is known driver-side
         # (4 shards per removed mapping), no extra job when nothing was removed
         if removed:
-            sinks.append(removal_tombstones(spark, removed), "tombstones", partition_by=None)
+            # version-scoped partition overwrite, as the settings stream
+            # writes them: a rerun after a crash before the manifest record
+            # replaces its own rows instead of doubling them
+            vdir = f"version={mappings.version}"
+            sinks.overwrite_partition(removal_tombstones(spark, removed), "tombstones", vdir)
             # metadata tombstones ride the same removal event
             # (metadata_publisher.go PublishTombstones)
-            sinks.append(
-                metadata_tombstones(spark, removed), "metadata_tombstones",
-                partition_by=None,
+            sinks.overwrite_partition(
+                metadata_tombstones(spark, removed), "metadata_tombstones", vdir,
             )
         counts["tombstones"] = 4 * len(removed)
         counts["metadata_tombstones"] = len(removed)

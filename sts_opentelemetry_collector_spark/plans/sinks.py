@@ -3,14 +3,19 @@
 The reference fans one stream out to Kafka (keyed records, topic
 override, tombstones — exporter/stskafkaexporter/exporter.go),
 ClickHouse (typed tables — exporter/clickhousestsexporter), and an HTTP
-topology intake (exporter/ststopologyexporter). Here every sink is a
-transaction-logged parquet table (plans/txlog.py — the Delta/Iceberg
-snapshot-commit mechanism implemented from scratch, since this container
-ships no JVM table-format runtime): writes are atomic commits, readers
-see only committed snapshots, upserts are real partition-pruned MERGEs,
-and crashed writes are invisible until vacuumed. On a cluster with a
-real lakehouse runtime the same narrow interface maps 1:1 onto Iceberg
-`writeTo(...).append()` / `MERGE INTO` / snapshot rollback.
+topology intake (exporter/ststopologyexporter). Here every sink, the
+intake included, is a transaction-logged parquet table (plans/txlog.py —
+the Delta/Iceberg snapshot-commit mechanism implemented from scratch,
+since this container ships no JVM table-format runtime): writes are
+atomic commits, readers see only committed snapshots, upserts are real
+partition-pruned MERGEs, and crashed writes are invisible until
+vacuumed. Each sink has one write shape — appends (logs, elements,
+envelopes, streams, errors, telemetry), a MERGE (resources, rollup), a
+versioned partition overwrite (tombstones) or a full-snapshot overwrite
+(stream metadata, intake) — and the txlog holds every table to one hive
+layout. On a cluster with a real lakehouse runtime
+the same narrow interface maps 1:1 onto Iceberg `writeTo(...).append()`
+/ `MERGE INTO` / snapshot rollback.
 
 Scale notes:
 - Writes are partitioned by (data_source, shard_id) — the Kafka
@@ -77,13 +82,7 @@ class SinkCatalog:
         return self.table(name).overwrite_partition(df, partition_dir, meta=meta)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        tbl = self.table(name)
-        if tbl.exists():
-            df = tbl.read(spark)
-        else:
-            # raw-directory sink (the K6 intake writes its own sorted
-            # per-api-key files outside the txlog)
-            df = spark.read.parquet(self.path(name))
+        df = self.table(name).read(spark)
         # _bucket is upsert-internal layout, not table schema
         return df.drop("_bucket") if "_bucket" in df.columns else df
 
@@ -130,12 +129,4 @@ class SinkCatalog:
         return self.table(name).compact(spark, target_file_bytes)
 
     def exists(self, name: str) -> bool:
-        if self.table(name).exists():
-            return True
-        # raw-directory sink fallback (K6 intake): data files and/or
-        # hive-style partition dirs present
-        p = self.path(name)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f.startswith("part-") or "=" in f
-            for f in os.listdir(p)
-        )
+        return self.table(name).exists()

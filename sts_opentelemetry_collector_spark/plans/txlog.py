@@ -38,11 +38,18 @@ Guarantees (and how):
   knows the file list) for auditing, and `publish()` makes it visible
   to everyone else. A crash before publish leaves invisible files,
   reclaimed by `vacuum()` — no recovery dance, no aside directories.
+- **One layout per table**: every live file sits under the same hive
+  partition columns, so a read is one basePath scan. A write whose
+  partition columns differ from the live files' raises before it
+  stages anything; only an overwrite that replaces every live file may
+  change the layout.
 - **MERGE**: `merge_upsert()` rewrites only the `_bucket` partitions
   its keys touch and commits {remove old bucket files, add new} in ONE
   commit — the dynamic-partition-overwrite MERGE INTO shape. Readers
   replaying the log pre-commit see the old buckets, post-commit the
-  new — never a mix.
+  new — never a mix. A merged table holds `_bucket=` files only, and a
+  merge conflicts with any commit since its read that changed a file
+  in a bucket it rewrites (every bucket, if it read an empty table).
 - **Rollback**: `rollback(version)` appends a commit removing exactly
   the files `version` added — a metadata-only undo (the write-audit-
   publish heal for runs that committed data but crashed before the
@@ -121,15 +128,17 @@ class PendingCommit:
         return self.table._read_files(spark, self.files, self.schema_json)
 
     def publish(self, remove: list[str] | None = None,
-                read_version: int | None = None) -> int:
+                read_version: int | None = None,
+                dirs: list[str] | None = None) -> int:
         """Make the staged files visible atomically; returns the commit
         version. `remove` additionally drops live files (overwrite /
         merge shapes); `read_version` is the snapshot they were read at
-        (see TxLogTable._commit)."""
+        and `dirs` the partition dirs this write rewrites (see
+        TxLogTable._commit)."""
         return self.table._commit(
             self.op, add=self.files, remove=remove or [],
             schema_json=self.schema_json, meta=self.meta,
-            read_version=read_version,
+            read_version=read_version, dirs=dirs,
         )
 
 
@@ -244,13 +253,16 @@ class TxLogTable:
 
     def _commit(self, op: str, add: list[str], remove: list[str],
                 schema_json: str | None, meta: dict,
-                read_version: int | None = None, retries: int = 20) -> int:
+                read_version: int | None = None, retries: int = 20,
+                dirs: list[str] | None = None) -> int:
         """Claim the next version for {add, remove}. A commit that removes
         files passes the `read_version` its remove set was computed at:
         before each claim it is re-validated against every commit since,
         and CommitConflict is raised if one of them removed or added a
-        file of the remove set — rebasing onto that tip would publish a
-        rewrite of rows that are no longer live (a lost update)."""
+        file of the remove set, or any file under one of the partition
+        `dirs` (relpath prefixes) the commit rewrites — rebasing onto that
+        tip would publish a rewrite of rows that are no longer live, or
+        miss rows that are (a lost update)."""
         rec = {
             "op": op,
             "ts": time.time(),
@@ -269,7 +281,7 @@ class TxLogTable:
             for _ in range(retries):
                 version = self._tip() + 1
                 if read_version is not None:
-                    self._validate(read_version, version, remove)
+                    self._validate(read_version, version, remove, dirs or [])
                 try:
                     os.link(tmp, self._commit_path(version))  # atomic claim
                     self._maybe_write_checkpoint(version)
@@ -282,35 +294,56 @@ class TxLogTable:
         finally:
             os.unlink(tmp)
 
-    def _validate(self, read_version: int, version: int, remove: list[str]) -> None:
+    def _validate(self, read_version: int, version: int, remove: list[str],
+                  dirs: list[str]) -> None:
         """Raise CommitConflict if a commit in (read_version, version)
-        removed or added a file of `remove`."""
+        removed or added a file of `remove` or a file under `dirs`."""
         doomed = set(remove)
-        if not doomed or version <= read_version + 1:
+        prefixes = tuple(dirs)
+        if not (doomed or prefixes) or version <= read_version + 1:
             return
         for v in self.versions():
             if not read_version < v < version:
                 continue
             with open(self._commit_path(v)) as f:
                 rec = json.load(f)
-            hit = doomed.intersection(rec.get("remove", []) + rec.get("add", []))
+            hit = [
+                p for p in rec.get("remove", []) + rec.get("add", [])
+                if p in doomed or p.startswith(prefixes)
+            ]
             if hit:
                 raise CommitConflict(
                     f"commit {v} ({rec.get('op')}) changed {len(hit)} file(s) "
-                    f"this commit removes, read at version {read_version}"
+                    f"this commit rewrites, read at version {read_version}"
                 )
 
     # ---- write paths --------------------------------------------------
 
     def stage(self, df: DataFrame, partition_by: list[str] | None = None,
               op: str = "append", meta: dict | None = None,
-              compression: str | None = None) -> PendingCommit:
+              compression: str | None = None,
+              partition_dir: str | None = None) -> PendingCommit:
         """Write data files into the table WITHOUT publishing them.
 
-        Spark writes to a scratch dir; files are then renamed into the
-        table root under their hive partition dirs with a unique prefix
-        (immutable, collision-free). Rename is metadata-only on the same
-        filesystem — no data copy."""
+        Spark writes to a scratch dir; files are then renamed, once, into
+        `partition_dir` (a hive partition path such as 'version=7';
+        default the table root) under their `partition_by` dirs, with a
+        unique prefix (immutable, collision-free). Rename is metadata-only
+        on the same filesystem — no data copy.
+
+        Raises ValueError, before anything is written, if the table's
+        live files use other hive partition columns; an `overwrite`
+        replaces every live file and may change the layout."""
+        layout = _hive_columns(os.path.join(partition_dir or "", "_")) + tuple(
+            partition_by or ()
+        )
+        if op != "overwrite":
+            live = self.snapshot()[0]
+            if live and _hive_columns(live[0]) != layout:
+                raise ValueError(
+                    f"{self.root}: a write partitioned by {list(layout)} into a "
+                    f"table laid out by {list(_hive_columns(live[0]))}"
+                )
         scratch = os.path.join(self.root, f"_stage_{uuid.uuid4().hex[:12]}")
         w = df.write.mode("overwrite")
         if compression:
@@ -322,21 +355,14 @@ class TxLogTable:
         prefix = uuid.uuid4().hex[:12]
         files: list[str] = []
         for dirpath, _dirs, names in os.walk(scratch):
-            rel_dir = os.path.relpath(dirpath, scratch)
+            rel_dir = os.path.join(partition_dir or "", os.path.relpath(dirpath, scratch))
             for name in names:
                 if not name.endswith(".parquet"):
                     continue  # _SUCCESS / .crc markers stay behind
-                dest_dir = (
-                    self.root if rel_dir == "." else os.path.join(self.root, rel_dir)
-                )
-                os.makedirs(dest_dir, exist_ok=True)
-                dest_name = f"{prefix}-{name}"
-                os.rename(
-                    os.path.join(dirpath, name), os.path.join(dest_dir, dest_name)
-                )
-                rel = (
-                    dest_name if rel_dir == "." else os.path.join(rel_dir, dest_name)
-                )
+                rel = os.path.normpath(os.path.join(rel_dir, f"{prefix}-{name}"))
+                dest = os.path.join(self.root, rel)
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                os.rename(os.path.join(dirpath, name), dest)
                 files.append(rel)
         import shutil as _shutil
 
@@ -365,19 +391,8 @@ class TxLogTable:
         base = self._tip()
         live, _ = self.snapshot(base)
         doomed = [p for p in live if p.startswith(pref)]
-        staged = self.stage(df, partition_by=None, op="overwrite_partition",
-                            meta=meta)
-        # relocate staged files into the partition dir (stage wrote them
-        # at the root — cheaper than re-deriving a partitioned frame)
-        moved = []
-        os.makedirs(os.path.join(self.root, partition_dir), exist_ok=True)
-        for rel in staged.files:
-            dst_rel = os.path.join(partition_dir, os.path.basename(rel))
-            os.rename(
-                os.path.join(self.root, rel), os.path.join(self.root, dst_rel)
-            )
-            moved.append(dst_rel)
-        staged.files = sorted(moved)
+        staged = self.stage(df, op="overwrite_partition", meta=meta,
+                            partition_dir=partition_dir)
         return staged.publish(remove=doomed, read_version=base)
 
     def rollback(self, version: int, meta: dict | None = None) -> int:
@@ -418,31 +433,17 @@ class TxLogTable:
             return spark.createDataFrame(
                 [], StructType.fromJson(json.loads(schema_json))
             )
-        # Group files by their hive-partition SIGNATURE (the set of k=
-        # column names along the relative path): one basePath read per
-        # group, unioned by name. A single mixed read would hit Spark's
-        # conflicting-directory-structure behavior and silently drop the
-        # minority layout (found by the model-based random-ops test —
-        # e.g. root-level append files alongside _bucket= merge files).
-        groups: dict[tuple[str, ...], list[str]] = {}
-        for rel in files:
-            groups.setdefault(_hive_columns(rel), []).append(rel)
-        # basePath recovers hive partition columns from dir names. The log
-        # schema is the union of every commit's, so a column added by a
-        # later append reads as null for older files, with no footer
+        # One scan: every file shares the table's hive layout (see stage),
+        # and basePath recovers its partition columns from dir names. The
+        # log schema is the union of every commit's, so a column added by
+        # a later append reads as null for older files, with no footer
         # inference job; a log with no schema infers one (mergeSchema).
         reader = spark.read.option("basePath", self.root)
         if schema_json is None:
             reader = reader.option("mergeSchema", "true")
         else:
             reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
-        dfs = []
-        for rels in groups.values():
-            dfs.append(reader.parquet(*[os.path.join(self.root, p) for p in rels]))
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return reader.parquet(*[os.path.join(self.root, p) for p in files])
 
     def read(self, spark: SparkSession, at_version: int | None = None) -> DataFrame:
         files, schema = self.snapshot(at_version)
@@ -460,10 +461,13 @@ class TxLogTable:
         the live files of touched `_bucket` partitions (partition-pruned
         scan), resolve each key's output row with `combine(merged,
         value_cols) -> latest`, and publish {remove touched files, add
-        rewritten} as ONE atomic commit. Untouched buckets' files are
-        never rewritten (byte-identical). Returns the post-merge table
-        row count — observed on the rewrite plus parquet FOOTER counts
-        of untouched files (no extra scan job)."""
+        rewritten} as ONE atomic commit, which conflicts with any commit
+        since the read that changed a touched bucket. Untouched buckets'
+        files are never rewritten (byte-identical). A table with live
+        files outside `_bucket=` dirs raises ValueError (see stage).
+        Returns the post-merge table row count — observed on the rewrite
+        plus parquet FOOTER counts of untouched files (no extra scan
+        job)."""
         spark = df.sparkSession
         bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast(
             "int"
@@ -477,39 +481,17 @@ class TxLogTable:
             touched = sorted(
                 r["_bucket"] for r in new.select("_bucket").distinct().collect()
             )
-            pref = {f"_bucket={b}{os.sep}" for b in touched}
-            # files NOT in bucket layout (plain appends/overwrites into a
-            # later-merged table) may hold ANY key — they join the merge
-            # wholesale and come out bucket-partitioned (one-time
-            # migration per file); bucketed files merge only when touched
-            unbucketed = [
-                p for p in live if not p.split(os.sep, 1)[0].startswith("_bucket=")
-            ]
-            doomed = unbucketed + [
-                p for p in live if any(p.startswith(x) for x in pref)
-            ]
-            existing = (
-                self._read_files(spark, doomed, schema)
-                .withColumn("_gen", F.lit(0))
-                if doomed
-                else None
-            )
-            if existing is not None:
-                # unbucketed rows carry no _bucket partition value:
-                # derive it from the keys (same expr as the new side)
-                if "_bucket" not in existing.columns:
-                    existing = existing.withColumn("_bucket", bucket)
-                else:
-                    existing = existing.withColumn(
-                        "_bucket",
-                        F.coalesce(F.col("_bucket").cast("int"), bucket),
-                    )
-                merged = existing.unionByName(new)
-            else:
-                merged = new
+            dirs = [f"_bucket={b}{os.sep}" for b in touched]
         else:
-            doomed = []
-            merged = new
+            dirs = ["_bucket="]  # an empty read: every bucket is touched
+        doomed = [p for p in live if p.startswith(tuple(dirs))]
+        merged = (
+            self._read_files(spark, doomed, schema)
+            .withColumn("_gen", F.lit(0))
+            .unionByName(new)
+            if doomed
+            else new
+        )
 
         value_cols = [c for c in merged.columns if c not in ("_gen",)]
         latest = combine(merged, value_cols)
@@ -522,9 +504,10 @@ class TxLogTable:
             op=op,
             meta=meta,
         )
-        staged.publish(remove=doomed, read_version=base)
+        staged.publish(remove=doomed, read_version=base, dirs=dirs)
         rewritten = int(obs.get["n"] or 0)
-        untouched = [p for p in live if p not in set(doomed)]
+        gone = set(doomed)
+        untouched = [p for p in live if p not in gone]
         if not untouched:
             return rewritten
         return rewritten + sum(
@@ -625,17 +608,7 @@ class TxLogTable:
             hive = set(_hive_columns(rels[0]))
             data_schema = StructType([f for f in fields if f.name not in hive])
             df = spark.read.schema(data_schema).parquet(*paths).coalesce(n_out)
-            staged = self.stage(df, partition_by=None, op="compact")
-            if part_dir:
-                os.makedirs(os.path.join(self.root, part_dir), exist_ok=True)
-                moved = []
-                for rel in staged.files:
-                    dst = os.path.join(part_dir, os.path.basename(rel))
-                    os.rename(
-                        os.path.join(self.root, rel), os.path.join(self.root, dst)
-                    )
-                    moved.append(dst)
-                staged.files = sorted(moved)
+            staged = self.stage(df, op="compact", partition_dir=part_dir)
             all_add.extend(staged.files)
             all_remove.extend(rels)
         if not all_remove:

@@ -261,26 +261,66 @@ def test_envelopes_streams_intake_metadata_sinks(spark, webtext_dir, tmp_path):
     assert summary2.get("skipped") or summary2["sink_counts"]["new_streams"] == 0
 
     # K6/A9: intake partitioned per api key, rows sorted by external_id
-    # within each file (canonical POST-body order)
-    intake_root = sinks.path("topology_intake")
-    key_dirs = [d for d in os.listdir(intake_root) if d.startswith("api_key=")]
-    assert "api_key=key-prod" in key_dirs and "api_key=default-key" in key_dirs
+    # within each live file (canonical POST-body order)
+    intake = sinks.table("topology_intake")
+    live = intake.snapshot()[0]
+    assert {f.split(os.sep)[0] for f in live} == {"api_key=key-prod", "api_key=default-key"}
     import pyarrow.parquet as pq
 
-    for kd in key_dirs:
-        for f in os.listdir(os.path.join(intake_root, kd)):
-            if not f.endswith(".parquet"):
-                continue
-            ids = pq.read_table(
-                os.path.join(intake_root, kd, f), columns=["external_id"]
-            )["external_id"].to_pylist()
-            assert ids == sorted(ids), f"unsorted intake file {kd}/{f}"
+    for f in live:
+        ids = pq.read_table(
+            os.path.join(intake.root, f), columns=["external_id"]
+        )["external_id"].to_pylist()
+        assert ids == sorted(ids), f"unsorted intake file {f}"
 
     # metadata: one record per live mapping
     meta = sinks.read(spark, "stream_metadata")
     assert meta.count() == len(
         default_mappings().components + default_mappings().relations
     )
+
+
+def test_intake_holds_only_the_current_api_keys(spark, webtext_dir, tmp_path):
+    """The intake is a full snapshot per run: after a run whose api keys
+    changed, it reads back only that run's rows, with no partition of an
+    api key the run no longer produces."""
+    from sts_opentelemetry_collector_spark.sources.webtext import write_webtext
+
+    out = str(tmp_path / "keys")
+    first = run_pipeline(
+        spark, _webtext_path(webtext_dir), out, n_lineage_buckets=4,
+        api_keys={"page-service": "key-prod"},
+    )
+    second_input = write_webtext(str(tmp_path / "second"), 300, seed=7)
+    second = run_pipeline(spark, second_input, out, n_lineage_buckets=4)
+    intake = SinkCatalog(os.path.join(out, "sinks")).read(spark, "topology_intake")
+    keys = {r.api_key for r in intake.select("api_key").distinct().collect()}
+    assert first["sink_counts"]["topology_intake"] > 0
+    assert keys == {"default-key"}
+    assert intake.count() == second["sink_counts"]["topology_intake"]
+
+
+def test_tombstones_converge_after_a_crash_before_the_manifest(
+    spark, webtext_dir, tmp_path, crash_once
+):
+    """A run with a mapping removal that crashes in the manifest record,
+    after its tombstones landed, reruns to the same tombstone rows as an
+    uninterrupted run: one per shard and one metadata tombstone."""
+    prev, cur = default_mappings(), default_mappings()
+    removed_id = cur.components.pop(1).identifier
+    out = str(tmp_path / "tomb_crash")
+    crash_once(Manifest, "record", lambda *a, **kw: True)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, _webtext_path(webtext_dir), out, mappings=cur,
+                     previous_mappings=prev, n_lineage_buckets=4)
+    run_pipeline(spark, _webtext_path(webtext_dir), out, mappings=cur,
+                 previous_mappings=prev, n_lineage_buckets=4)
+    sinks = SinkCatalog(os.path.join(out, "sinks"))
+    tombs = sinks.read(spark, "tombstones")
+    assert tombs.count() == 4
+    assert {r.data_source for r in tombs.collect()} == {removed_id}
+    assert [r.data_source for r in sinks.read(spark, "metadata_tombstones").collect()] \
+        == [removed_id]
 
 
 def test_metadata_tombstones_on_removal(spark, webtext_dir, tmp_path):

@@ -297,10 +297,10 @@ def test_compact_keeps_columns_added_later(spark, tmp_path, monkeypatch):
 
 def test_read_plans_without_spark_jobs(spark, tmp_path, spark_jobs):
     """The table schema comes from the log: building a read frame over
-    files of two schemas and two layouts launches no footer-inference
-    job; the action afterwards does launch jobs (the counter works)."""
+    files of two schemas launches no footer-inference job; the action
+    afterwards does launch jobs (the counter works)."""
     tbl = TxLogTable(str(tmp_path / "t"))
-    tbl.append(spark.createDataFrame([(1, 0)], "id long, p int"), partition_by=["p"])
+    tbl.append(spark.createDataFrame([(1, 0)], "id long, p int"))
     tbl.append(spark.createDataFrame([(2, "x")], "id long, extra string"))
     with spark_jobs() as jobs:
         df = tbl.read(spark)
@@ -314,25 +314,31 @@ def test_read_plans_without_spark_jobs(spark, tmp_path, spark_jobs):
 def test_txlog_model_random_ops(spark, tmp_path):
     """Model-based pin for the transaction log: a seeded random sequence
     of append / overwrite / merge_upsert / rollback-tip / vacuum /
-    compact ops must keep the table's visible ROWS equal to a pure-
-    python model at every step, and time travel must reproduce every
-    historical state."""
+    compact ops must keep each table's visible ROWS equal to a pure-
+    python model at every step. Appends and overwrites write one table,
+    merges a second (a table has one write shape); vacuum and compact
+    act on both, and a rollback inverts the tip of the table the last
+    mutation wrote."""
     import random
 
     from sts_opentelemetry_collector_spark.plans.txlog import TxLogTable
 
     rng = random.Random(23)
-    tbl = TxLogTable(str(tmp_path / "t"))
-    model: dict[int, int] = {}  # id -> v (merge key is id)
-    history: list[dict[int, int]] = []
+    tables = {
+        "plain": TxLogTable(str(tmp_path / "plain")),
+        "merged": TxLogTable(str(tmp_path / "merged")),
+    }
+    models: dict[str, dict[int, int]] = {"plain": {}, "merged": {}}  # id -> v
+    history: list[dict[str, dict[int, int]]] = []
     next_append_id = [1000]  # disjoint from merge/overwrite key space
 
     def df_of(rows):
         return spark.createDataFrame(rows, "id long, v long")
 
-    last_op = [None]
+    last_op = [None]  # (op, table name) of the last op
 
-    def snap_rows():
+    def snap_rows(name):
+        tbl = tables[name]
         return {r.id: r.v for r in tbl.read(spark).collect()} if tbl.exists() else {}
 
     for step in range(18):
@@ -343,52 +349,57 @@ def test_txlog_model_random_ops(spark, tmp_path):
             for _ in range(rng.randrange(1, 4)):
                 rows.append((next_append_id[0], rng.randrange(1000)))
                 next_append_id[0] += 1
-            tbl.append(df_of(rows))
+            tables["plain"].append(df_of(rows))
             for i, v in rows:
-                model[i] = v
-            last_op[0] = "append"
+                models["plain"][i] = v
+            last_op[0] = ("append", "plain")
         elif op == "merge":
             rows = [(rng.randrange(50), rng.randrange(1000))
                     for _ in range(rng.randrange(1, 4))]
             rows = list({i: v for i, v in rows}.items())  # one row per key
-            tbl.merge_upsert(df_of(rows), keys=["id"], order_col="v")
+            tables["merged"].merge_upsert(df_of(rows), keys=["id"], order_col="v")
             for i, v in rows:
-                model[i] = v
-            last_op[0] = "merge"
+                models["merged"][i] = v
+            last_op[0] = ("merge", "merged")
         elif op == "overwrite":
             rows = [(rng.randrange(50), rng.randrange(1000))
                     for _ in range(rng.randrange(1, 3))]
             rows = list({i: v for i, v in rows}.items())
-            tbl.overwrite(df_of(rows))
-            model = dict(rows)
-            last_op[0] = "overwrite"
-        elif op == "rollback" and history and last_op[0] in ("append", "merge",
-                                                             "overwrite"):
-            # the tip commit is last_op's mutation: history[-1] is its
-            # POST-state, history[-2] the pre-state rollback restores
-            tbl.rollback(tbl.versions()[-1])
-            model = dict(history[-2]) if len(history) >= 2 else {}
-            last_op[0] = "rollback"
+            tables["plain"].overwrite(df_of(rows))
+            models["plain"] = dict(rows)
+            last_op[0] = ("overwrite", "plain")
+        elif op == "rollback" and history and last_op[0] and last_op[0][0] in (
+            "append", "merge", "overwrite"
+        ):
+            # the tip commit of the written table is last_op's mutation:
+            # history[-1] is its POST-state, history[-2] the pre-state
+            # rollback restores
+            name = last_op[0][1]
+            tables[name].rollback(tables[name].versions()[-1])
+            models[name] = dict(history[-2][name]) if len(history) >= 2 else {}
+            last_op[0] = ("rollback", name)
         elif op == "vacuum":
             # retention contract: only between ops, single writer — safe
-            tbl.vacuum(0.0)
+            for tbl in tables.values():
+                tbl.vacuum(0.0)
             # NOTE: vacuuming forfeits invertibility of older commits;
             # the rollback arm above only ever inverts the tip created
             # AFTER the last vacuum (last_op gate), so this is legal
-            last_op[0] = "vacuum"
-            history.append(dict(model))
-            assert snap_rows() == model
-            continue
-        elif op == "compact" and tbl.exists():
-            tbl.compact(spark, target_file_bytes=1 << 30)
-            last_op[0] = "compact"
+            last_op[0] = ("vacuum", None)
+        elif op == "compact" and any(t.exists() for t in tables.values()):
+            for tbl in tables.values():
+                if tbl.exists():
+                    tbl.compact(spark, target_file_bytes=1 << 30)
+            last_op[0] = ("compact", None)
         else:
             continue
-        history.append(dict(model))
-        assert snap_rows() == model, f"step {step} op {op}"
+        history.append({name: dict(m) for name, m in models.items()})
+        for name in tables:
+            assert snap_rows(name) == models[name], f"step {step} op {op} {name}"
 
-    # time travel reproduces the final state pinned at its version
-    assert snap_rows() == model
+    # each table kept its one layout: merged files only under _bucket=
+    assert all(p.startswith("_bucket=") for p in tables["merged"].snapshot()[0])
+    assert not any(os.sep in p for p in tables["plain"].snapshot()[0])
 
 
 def test_txlog_model_additive_merge(spark, tmp_path):
@@ -478,23 +489,15 @@ def test_concurrent_writers_race_commit_claims(spark, tmp_path):
     assert writers.count(0) == n_each and writers.count(1000) == n_each
 
 
-def test_concurrent_merges_never_lose_an_update(spark, tmp_path):
-    """Two threads merge_upsert one table from the same snapshot (a
-    barrier holds each after its snapshot read until both have read).
-    Both rewrite the same bucket file: the loser of the commit race must
-    raise CommitConflict, not rebase its stale rewrite onto the new tip
-    (which left both rewrites live: the winner's key duplicated with its
-    old value). A retry of the loser then lands on the winner's table."""
+def _race_merges(spark, tbl, updates: dict, schema: str, n_buckets: int) -> dict:
+    """One thread per writer merge_upserts `updates[writer]` (rows) into
+    `tbl`; a barrier holds each after every snapshot read until all have
+    read. Returns {writer: "committed" | "conflict" | repr(error)}."""
     import threading
 
-    from sts_opentelemetry_collector_spark.plans.txlog import CommitConflict, TxLogTable
+    from sts_opentelemetry_collector_spark.plans.txlog import CommitConflict
 
-    schema = "k long, v string"
-    tbl = TxLogTable(str(tmp_path / "merged"))
-    tbl.merge_upsert(
-        spark.createDataFrame([(1, "old"), (2, "old")], schema), keys=["k"], n_buckets=1
-    )
-    barrier = threading.Barrier(2, timeout=120)
+    barrier = threading.Barrier(len(updates), timeout=120)
     snapshot = tbl.snapshot
 
     def held_snapshot(at_version=None):
@@ -503,26 +506,46 @@ def test_concurrent_merges_never_lose_an_update(spark, tmp_path):
         return out
 
     tbl.snapshot = held_snapshot
-    updates = {1: (1, "a"), 2: (2, "b")}
     outcome: dict = {}
 
-    def writer(k: int):
+    def writer(w):
         try:
             tbl.merge_upsert(
-                spark.createDataFrame([updates[k]], schema), keys=["k"], n_buckets=1
+                spark.createDataFrame(updates[w], schema), keys=["k"],
+                n_buckets=n_buckets,
             )
-            outcome[k] = "committed"
+            outcome[w] = "committed"
         except CommitConflict:
-            outcome[k] = "conflict"
+            outcome[w] = "conflict"
         except Exception as e:  # pragma: no cover
-            outcome[k] = repr(e)
+            outcome[w] = repr(e)
 
-    threads = [threading.Thread(target=writer, args=(k,)) for k in updates]
+    threads = [threading.Thread(target=writer, args=(w,)) for w in updates]
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
+        t.join(timeout=300)
     tbl.snapshot = snapshot
+    assert not any(t.is_alive() for t in threads), "a merge never finished"
+    return outcome
+
+
+def test_concurrent_merges_never_lose_an_update(spark, tmp_path):
+    """Two threads merge_upsert one table from the same snapshot (a
+    barrier holds each after its snapshot read until both have read).
+    Both rewrite the same bucket file: the loser of the commit race must
+    raise CommitConflict, not rebase its stale rewrite onto the new tip
+    (which left both rewrites live: the winner's key duplicated with its
+    old value). A retry of the loser then lands on the winner's table."""
+    schema = "k long, v string"
+    tbl = TxLogTable(str(tmp_path / "merged"))
+    tbl.merge_upsert(
+        spark.createDataFrame([(1, "old"), (2, "old")], schema), keys=["k"], n_buckets=1
+    )
+    updates = {1: (1, "a"), 2: (2, "b")}
+    outcome = _race_merges(
+        spark, tbl, {k: [row] for k, row in updates.items()}, schema, n_buckets=1
+    )
     assert sorted(outcome.values()) == ["committed", "conflict"], outcome
     (won,) = [k for k, o in outcome.items() if o == "committed"]
     (lost,) = [k for k, o in outcome.items() if o == "conflict"]
@@ -533,3 +556,67 @@ def test_concurrent_merges_never_lose_an_update(spark, tmp_path):
     )
     rows = sorted(tuple(r) for r in tbl.read(spark).select("k", "v").collect())
     assert rows == [(1, "a"), (2, "b")]
+
+
+@pytest.mark.parametrize("held", [[(1, "old")], []], ids=["key1", "empty"])
+def test_concurrent_merges_into_an_empty_bucket_conflict(spark, tmp_path, held):
+    """Two threads upsert the same new key 2 from the same snapshot into a
+    2-bucket table whose bucket for key 2 holds no file (key 1 hashes to
+    the other bucket), or into an empty table. Neither merge removes a
+    file, yet the second to commit must raise CommitConflict: both
+    committing left key 2 live twice."""
+    schema = "k long, v string"
+    tbl = TxLogTable(str(tmp_path / "merged"))
+    if held:
+        tbl.merge_upsert(spark.createDataFrame(held, schema), keys=["k"], n_buckets=2)
+        assert len(tbl.snapshot()[0]) == 1  # key 2's bucket holds no file
+    updates = {"a": [(2, "a")], "b": [(2, "b")]}
+    outcome = _race_merges(spark, tbl, updates, schema, n_buckets=2)
+    assert sorted(outcome.values()) == ["committed", "conflict"], outcome
+    (won,) = [w for w, o in outcome.items() if o == "committed"]
+    rows = sorted(tuple(r) for r in tbl.read(spark).select("k", "v").collect())
+    assert rows == sorted(held + updates[won])
+
+
+def _data_files(root: str) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, names in os.walk(root) for f in names if f.endswith(".parquet")
+    )
+
+
+def test_merge_rejects_a_table_with_root_level_files(spark, tmp_path):
+    """A merged table holds `_bucket=` files only: a merge into a table
+    that plain appends wrote raises before it stages anything, and the
+    table is unchanged."""
+    tbl = TxLogTable(str(tmp_path / "t"))
+    tbl.append(spark.createDataFrame([(1, 10)], "id long, v long"))
+    versions, files = tbl.versions(), _data_files(tbl.root)
+    with pytest.raises(ValueError, match="_bucket"):
+        tbl.merge_upsert(
+            spark.createDataFrame([(1, 11), (2, 20)], "id long, v long"), keys=["id"]
+        )
+    assert tbl.versions() == versions and _data_files(tbl.root) == files
+    assert [tuple(r) for r in tbl.read(spark).collect()] == [(1, 10)]
+
+
+def test_write_with_a_second_layout_raises(spark, tmp_path):
+    """One hive layout per table: an append or a partition overwrite whose
+    partition columns differ from the live files' raises before it
+    stages anything; an overwrite that replaces every live file may
+    change the layout."""
+    tbl = TxLogTable(str(tmp_path / "t"))
+    tbl.append(spark.createDataFrame([(1, 0)], "id long, p int"), partition_by=["p"])
+    versions, files = tbl.versions(), _data_files(tbl.root)
+    with pytest.raises(ValueError, match="laid out by"):
+        tbl.append(spark.createDataFrame([(2, 1)], "id long, p int"))
+    with pytest.raises(ValueError, match="laid out by"):
+        tbl.overwrite_partition(spark.createDataFrame([(3,)], "id long"), "version=1")
+    assert tbl.versions() == versions and _data_files(tbl.root) == files
+    assert not [d for d in os.listdir(tbl.root) if d.startswith("_stage_")]
+
+    tbl.append(spark.createDataFrame([(4, 1)], "id long, p int"), partition_by=["p"])
+    tbl.overwrite(spark.createDataFrame([(5, 2)], "id long, p int"))
+    assert [tuple(r) for r in tbl.read(spark).collect()] == [(5, 2)]
+    tbl.append(spark.createDataFrame([(6, 3)], "id long, p int"))
+    assert sorted(tuple(r) for r in tbl.read(spark).collect()) == [(5, 2), (6, 3)]

@@ -224,16 +224,30 @@ def _error_counts(sinks, spark):
     }
 
 
-def test_streaming_mapping_errors_match_batch(
-    spark, arrivals, error_stream, null_ident_mappings, tmp_path
-):
+@pytest.fixture(scope="module")
+def error_batch(spark, arrivals, null_ident_mappings, tmp_path_factory):
+    """The batch run over the same arrivals and mappings: its sinks."""
+    out = str(tmp_path_factory.mktemp("error_batch"))
+    run_pipeline(spark, arrivals, out, mappings=null_ident_mappings, n_lineage_buckets=4)
+    return SinkCatalog(os.path.join(out, "sinks"))
+
+
+def test_streaming_mapping_errors_match_batch(spark, error_stream, error_batch):
     """Each micro-batch observes its record errors like a batch run, so
     the stream's mapping_errors add up to the batch run's."""
-    b_out = str(tmp_path / "batch")
-    run_pipeline(spark, arrivals, b_out, mappings=null_ident_mappings, n_lineage_buckets=4)
     got = _error_counts(error_stream[1], spark)
-    assert got == _error_counts(SinkCatalog(os.path.join(b_out, "sinks")), spark)
+    assert got == _error_counts(error_batch, spark)
     assert sum(got.values()) == 2100
+
+
+def test_every_sink_has_a_commit_log(error_stream, error_batch):
+    """Every sink the batch and the streaming pipeline write, the K6
+    intake included, is a txlog table: its directory holds a `_txlog/`."""
+    for sinks in (error_stream[1], error_batch):
+        names = sorted(os.listdir(sinks.root))
+        assert "topology_intake" in names and "mapping_errors" in names, names
+        for name in names:
+            assert os.path.isdir(os.path.join(sinks.path(name), "_txlog")), name
 
 
 def test_redelivered_micro_batch_is_exactly_once(
